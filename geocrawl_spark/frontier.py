@@ -411,16 +411,22 @@ class CrawlEngine:
         One seen-filter pass (strategy per ``self.mode``) does
         within-batch dedup + seen-test + state update + per-kind stats;
         robots are checked on the fresh survivors only.  Returns
-        (flagged, persist_state, parents, stats_fn); ``stats_fn()``
+        (flagged, parents, stats_fn, new_state, append_fn); ``stats_fn()``
         yields {kind: {candidates, fresh, deduped, denied}} in ONE
         driver-blocking call (a single combined aggregate in abucket
         mode; two internally-overlapped actions in the snapshot modes).
-        ``persist_state()``
-        writes this round's seen-state update — a full ``seen_shards``
-        snapshot for exact/bloom/anti/bitword, an O(fresh) partition
-        append into the bucketed store for abucket.  ``flagged`` is
-        persisted — caller unpersists it and every df in ``parents`` after
-        ``persist_state()`` ran.
+        Every df in ``parents`` is persisted, and so is ``flagged`` in the
+        snapshot modes; in abucket mode ``flagged`` is an unpersisted view
+        over ``flagged_all`` (its one parent).  The caller unpersists
+        ``flagged`` and ``parents`` once the round's writes have returned.
+
+        The seen-state update is one of two shapes.  Snapshot modes
+        return ``new_state``, the full ``seen_shards`` snapshot, written
+        with the round's other writes (a plain parquet path write).
+        abucket returns ``append_fn(urls)``, the O(fresh) partition
+        append into the bucketed store, called on the round's written
+        ``admitted`` table AFTER the unpersist (see
+        :func:`seen.filter_and_update_abucket_flagged`).
         """
         def _robots_cols(df: DataFrame) -> DataFrame:
             return (
@@ -439,9 +445,9 @@ class CrawlEngine:
 
         if self.mode == "abucket":
             # single-materialization admission (guide §5): the seen flag,
-            # the robots decoration, the stats, the fresh rows and the
-            # O(fresh) append all read ONE persisted pass over the
-            # deduped candidates instead of three chained persists
+            # the robots decoration, the stats and the fresh rows all read
+            # ONE persisted pass over the deduped candidates instead of
+            # three chained persists
             flagged_all, _stats_df, append_fn = S.filter_and_update_abucket_flagged(
                 cand, self.spark, self._seen_table(), self.n_buckets,
                 upto_round=round_no - 1, round_no=round_no,
@@ -464,9 +470,9 @@ class CrawlEngine:
                     F.when(F.col("_seen").isNull() & F.col("denied"), True)
                 ).alias("n_denied"),
             )
-            return flagged, append_fn, [flagged_all], (
+            return flagged, [flagged_all], (
                 lambda: self._stats_dict(stats_all)
-            )
+            ), None, append_fn
         if self.mode in ("exact", "bloom", "cuckoo"):
             fresh, new_state, seen_out = S.filter_and_update(
                 cand, state, self.mode, self.n_shards, self.m_bits, self.k
@@ -480,9 +486,6 @@ class CrawlEngine:
                 cand, state, self.m_bits, self.k
             )
             parents, stats_fn = [parent], lambda: self._stats_dict(stats_df)
-        persist_state = lambda: self.io.write_table(  # noqa: E731
-            new_state, "seen_shards", round_no
-        )
         flagged = (
             _robots_cols(fresh)
             .select("url", "host", "depth", "kind", "denied")
@@ -514,7 +517,7 @@ class CrawlEngine:
                     s[k] = {"candidates": 0, "fresh": 0, "deduped": 0, "denied": n}
             return s
 
-        return flagged, persist_state, parents, stats_fn
+        return flagged, parents, stats_fn, new_state, None
 
     def _empty_carry(self) -> DataFrame:
         return self.spark.createDataFrame([], "host string, carry long")
@@ -741,12 +744,13 @@ class CrawlEngine:
     def init_state(self) -> dict:
         """Round 0: admit the seed list; commit the initial snapshot.
 
-        Independent driver-blocking actions (the two admission stats
-        collects, then the four snapshot writes + seen-state persist) are
-        submitted CONCURRENTLY from a thread pool: each action's Catalyst
-        analysis and job-scheduling latency — the engine's dominant fixed
-        per-round cost — overlaps instead of summing.  The commit point
-        stays strictly after every write has returned."""
+        Independent driver-blocking actions (the admission stats
+        collect, then the snapshot writes) are submitted CONCURRENTLY from
+        a thread pool: each action's Catalyst analysis and job-scheduling
+        latency — the engine's dominant fixed per-round cost — overlaps
+        instead of summing.  The seen-store append (after the caches are
+        dropped, as in run_round) and the commit point stay strictly
+        after every write has returned."""
         marks: list = []
         self._mark(marks, "start")
         self.io.set_meta(
@@ -782,7 +786,9 @@ class CrawlEngine:
                 )
             )
             seeds = seeds.unionByName(sitemaps)
-        flagged, persist_state, parents, stats_fn = self._admit(seeds, state, 0)
+        flagged, parents, stats_fn, new_state, append_seen = self._admit(
+            seeds, state, 0
+        )
         counters = {k: 0 for k in COUNTER_KEYS}
         with ThreadPoolExecutor(max_workers=8) as pool:
             f_stats = pool.submit(stats_fn)
@@ -806,6 +812,10 @@ class CrawlEngine:
                 pool.submit(self.io.write_table, self._empty_carry(), "hostcarry", 0),
                 pool.submit(self._write_counters, counters, 0),
             ]
+            if new_state is not None:
+                writes.append(
+                    pool.submit(self.io.write_table, new_state, "seen_shards", 0)
+                )
             if self.adaptive_budget:
                 # round 0 pops nothing — seed the feedback loop empty so
                 # round 1's hosterr read always resolves (incl. on resume)
@@ -862,11 +872,11 @@ class CrawlEngine:
             for w in writes:
                 w.result()  # propagate failures BEFORE the commit point
             self._mark(marks, "writes_joined")
-            # AFTER the flagged-scanning writes: the abucket append's
-            # insertInto invalidates cached plans referencing the seen
-            # table (see run_round) — never run it concurrently with them
-            persist_state()
-            self._mark(marks, "seen_persist")
+        for df in (flagged, *parents):
+            df.unpersist()
+        if append_seen is not None:
+            append_seen(self.io.read_table(self.spark, "admitted", 0))
+        self._mark(marks, "seen_persist")
         if os.environ.get("GEOCRAWL_PROFILE"):
             spans = [
                 f"{label}={t1 - t0:.2f}s"
@@ -878,8 +888,6 @@ class CrawlEngine:
             ["frontier", *self._state_tables(), "admitted", "hostcarry",
              "crawl_log", "hosterr", "hostqual", "hosttrap", "hostdup"],
         )
-        for df in (flagged, *parents):
-            df.unpersist()
         return counters
 
     def _write_counters(self, counters: dict, round_no: int) -> None:
@@ -1022,7 +1030,7 @@ class CrawlEngine:
         # commit_round stays unreachable on failure (manifest untouched).
         pool = ThreadPoolExecutor(max_workers=8)
         writes: list = []
-        flagged = kinded = parsed = persist_state = None
+        flagged = kinded = parsed = append_seen = None
         done_h = ext_src = ch_marked = None
         parents: list = []
         f_nassets = f_ndead = None
@@ -1043,7 +1051,7 @@ class CrawlEngine:
                     [], "url string, host string, depth long, kind string, denied boolean"
                 ).persist()
                 kinded = None
-                parents, parsed, persist_state = [], None, None
+                parents, parsed = [], None
                 f_nassets = f_ndead = None
                 if self.mode != "abucket":
                     # carry the unchanged seen state forward — a plain parquet
@@ -1337,8 +1345,8 @@ class CrawlEngine:
                 )
 
                 # --- single admission pass (seen filter + robots) ------------
-                flagged, persist_state, parents, stats_fn = self._admit(
-                    cand, state, round_no
+                flagged, parents, stats_fn, new_state, append_seen = (
+                    self._admit(cand, state, round_no)
                 )
                 f_stats = pool.submit(stats_fn)
                 stats = f_stats.result()
@@ -1379,6 +1387,12 @@ class CrawlEngine:
                         flagged.select("url", "kind"), "admitted", round_no,
                     )
                 )
+                if new_state is not None:
+                    writes.append(
+                        pool.submit(
+                            self.io.write_table, new_state, "seen_shards", round_no
+                        )
+                    )
                 self._mark(marks, "tail_submitted")
 
             # --- per-host lineage (north_rule: per-partition lineage+metrics;
@@ -1484,24 +1498,21 @@ class CrawlEngine:
             for w in writes:
                 w.result()  # propagate any write failure BEFORE the commit
             self._mark(marks, "writes_joined")
-            # Seen-state persist runs strictly AFTER every pooled write that
-            # scans `flagged`/`fresh` has completed: the abucket append is an
-            # insertInto on the seen-store CATALOG table, which invalidates
-            # cached plans referencing that table (the admission anti-join
-            # feeding flagged) — running it concurrently yanks cached blocks
-            # from under the in-flight writes (BlockNotFound).  Serial cost is
-            # the one O(fresh) partition append.
-            if persist_state is not None:
-                persist_state()
-            self._mark(marks, "seen_persist")
         finally:
             pool.shutdown(wait=True, cancel_futures=True)
             for df in (fetched, flagged, parsed, pend_h, done_h, ext_src,
-                       ch_marked, *parents):
+                       ch_marked, kinded, *parents):
                 if df is not None:
                     df.unpersist()
-            if kinded is not None:
-                kinded.unpersist()
+        # The abucket append runs once every cache above is dropped: its
+        # insertInto on the seen-store catalog table makes Spark re-plan
+        # each cached plan that scans the store (the admission pass and
+        # everything derived from it), seconds per plan, and a dropped
+        # cache has nothing to re-plan.  Its source is the round's
+        # just-written `admitted` (exactly the fresh rows), not the cache.
+        if append_seen is not None:
+            append_seen(self.io.read_table(self.spark, "admitted", round_no))
+        self._mark(marks, "seen_persist")
         self.io.commit_round(
             round_no,
             ["frontier", *self._state_tables(), "admitted", "hostcarry",

@@ -107,14 +107,6 @@ def basename_expr(url: Column) -> Column:
     return F.element_at(F.split(F.regexp_replace(url, r"\?.*$", ""), "/"), -1)
 
 
-def _fields_map_expr(name: Column, key: str) -> Column:
-    jp = java_pattern(key)
-    pairs: list[Column] = []
-    for i, g in enumerate(GROUPS[key], start=1):
-        pairs += [F.lit(g), F.regexp_extract(name, jp, i)]
-    return F.create_map(*pairs)
-
-
 def parse_name_expr(url: Column) -> Column:
     """struct<pattern:string, fields:map<string,string>, ts:timestamp>;
     pattern/fields/ts are null when no pattern matches (dead-letter path,
@@ -127,24 +119,36 @@ def parse_name_expr(url: Column) -> Column:
     )
     # build the cascade back-to-front so earlier patterns win
     for key in reversed(list(PATTERNS)):
-        fields = _fields_map_expr(name, key)
+        jp = java_pattern(key)
+        groups = {
+            g: F.regexp_extract(name, jp, i)
+            for i, g in enumerate(GROUPS[key], start=1)
+        }
+        # the timestamp reads the pattern's own group extracts (group
+        # names are static), never the map: a map lookup would copy the
+        # whole create_map into the tree once per time field
         cand = F.struct(
             F.lit(key).alias("pattern"),
-            fields.alias("fields"),
-            parse_time_expr(fields).alias("ts"),
+            F.create_map(*[c for g, e in groups.items() for c in (F.lit(g), e)]).alias(
+                "fields"
+            ),
+            parse_time_expr(groups).alias("ts"),
         )
-        result = F.when(name.rlike(java_pattern(key)), cand).otherwise(result)
+        result = F.when(name.rlike(jp), cand).otherwise(result)
     return result
 
 
-def parse_time_expr(m: Column) -> Column:
-    year = m.getItem("year").cast("int")
-    jd = m.getItem("julian_day").cast("int")
-    month = m.getItem("month").cast("int")
-    day = m.getItem("day").cast("int")
-    hour = F.coalesce(m.getItem("hour").cast("int"), F.lit(0))
-    minute = F.coalesce(m.getItem("minute").cast("int"), F.lit(0))
-    second = F.coalesce(m.getItem("second").cast("int"), F.lit(0))
+def parse_time_expr(fields: dict[str, Column]) -> Column:
+    """parse_time over one pattern's {group name: string column}; a
+    field the pattern lacks reads as null."""
+    absent = F.lit(None).cast("string")
+    year = fields.get("year", absent).cast("int")
+    jd = fields.get("julian_day", absent).cast("int")
+    month = fields.get("month", absent).cast("int")
+    day = fields.get("day", absent).cast("int")
+    hour = F.coalesce(fields.get("hour", absent).cast("int"), F.lit(0))
+    minute = F.coalesce(fields.get("minute", absent).cast("int"), F.lit(0))
+    second = F.coalesce(fields.get("second", absent).cast("int"), F.lit(0))
 
     jan1 = F.make_timestamp(year, F.lit(1), F.lit(1), F.lit(0), F.lit(0), F.lit(0))
     with_jd = F.when(

@@ -420,7 +420,7 @@ def gopher_repetition(spark, sf_dir):
     )
     wtab = dw.select("doc_id", F.explode(words).alias("w")).localCheckpoint(
         eager=False
-    )  # read by both the top-word count and the word total
+    )  # one consumer (the top-word count); the word total reads dw
     cw = wtab.groupBy("doc_id", "w").agg(F.count("*").cast("long").alias("cnt"))
     # same argmax-as-aggregate move as top_char_frac above
     topw = (

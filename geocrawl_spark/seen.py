@@ -772,8 +772,8 @@ def filter_and_update_abucket_flagged(
     but the membership test is a LEFT join flag (``_seen``) over the
     DEDUPED seen projection instead of an anti-join, the caller's row
     decoration (host / robots columns via ``decorate``) is applied
-    before the single ``persist()``, and fresh rows, admission stats and
-    the O(fresh) append are all cheap scans of that one materialization.
+    before the single ``persist()``, and fresh rows and admission stats
+    are cheap scans of that one materialization.
 
     The seen side is deduped (bucket-local aggregate, no Exchange: the
     grouping key is the bucket key) because compaction crash windows can
@@ -785,8 +785,18 @@ def filter_and_update_abucket_flagged(
 
     Returns ``(flagged_all PERSISTED — deduped candidates + decorated
     columns + _seen, stats(kind, n_cand, n_fresh), append_fn)``; fresh
-    rows are ``flagged_all.filter(_seen IS NULL)``.  Caller unpersists
-    ``flagged_all`` after ``append_fn()`` ran and every read completed.
+    rows are ``flagged_all.filter(_seen IS NULL)``.  The engine derives
+    its own combined stats from ``flagged_all``; ``stats`` serves the
+    standalone admission probe (``perfbench/workloads.py``
+    ``_seen_probe`` reads ``n_cand``).
+
+    ``append_fn(urls)`` appends ``xxhash64(url)`` over ``urls`` as
+    partition ``round=round_no``.  Pass the fresh rows' urls, read from
+    storage rather than from ``flagged_all``: every fresh row's url
+    hashes to its h1 group, so the set is the fresh h1 set.  Unpersist
+    ``flagged_all`` (and every cache derived from it) BEFORE calling it:
+    the insert makes Spark re-plan each cached plan that scans the
+    store, a cost of seconds per cached plan while it is alive.
     """
     if "kind" not in candidates.columns:
         candidates = candidates.withColumn("kind", F.lit("page"))
@@ -810,21 +820,21 @@ def filter_and_update_abucket_flagged(
     if decorate is not None:
         out = decorate(out)
     out = out.persist()
-    fresh = out.filter(F.col("_seen").isNull())
     stats = out.groupBy("kind").agg(
         F.count("*").alias("n_cand"),
         F.count(F.when(F.col("_seen").isNull(), True)).alias("n_fresh"),
     )
 
-    def append_fn() -> None:
+    def append_fn(urls: DataFrame) -> None:
         # dynamic overwrite scoped to this write — identical protocol and
         # rationale as :func:`filter_and_update_abucket`'s append
         conf = spark.conf
         prev = conf.get("spark.sql.sources.partitionOverwriteMode")
         conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         try:
-            fresh.select(
-                "h1", F.lit(round_no).cast("long").alias("round")
+            urls.select(
+                F.xxhash64("url").alias("h1"),
+                F.lit(round_no).cast("long").alias("round"),
             ).write.mode("overwrite").insertInto(table)
         finally:
             conf.set("spark.sql.sources.partitionOverwriteMode", prev)

@@ -268,14 +268,27 @@ def test_kill_resume_identical_abucket(spark, fixtures, tmp_path_factory, pyref_
     reader's ``round <= committed`` filter guarantee it without cleanup,
     and the re-run's dynamic partition overwrite replaces the stale
     partition idempotently."""
+    import os
+
     eng = _mk_engine(spark, fixtures, tmp_path_factory.mktemp("crawlab"), mode="abucket")
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
     eng.init_state()
     eng.run_round(1)
+    n_cached = persistent().size()
     eng.run_round(2)
     eng.run_round(3)  # round 3 fully ran: its seen-store partition exists...
+    # every round drops what it cached before the store append
+    assert persistent().size() <= n_cached
+    # the store append hashes the round's written `admitted` table: each
+    # round's partition is exactly xxhash64 over that round's admissions
+    for r in range(4):
+        part = os.path.join(str(eng.io.base), "seen_store", f"round={r}")
+        got = sorted(row[0] for row in spark.read.parquet(part).collect())
+        admitted = eng.io.read_table(spark, "admitted", r)
+        want = sorted(row[0] for row in admitted.select(F.xxhash64("url")).collect())
+        assert got == want and want, r
     eng.io.rollback_to(2)  # ...but the crash voided the commit
     # the uncommitted partition is really there (the hazard is real)
-    import os
     assert os.path.exists(os.path.join(str(eng.io.base), "seen_store", "round=3"))
     # a brand-new engine resumes from the last committed snapshot and must
     # reproduce the oracle exactly despite the stale partition
