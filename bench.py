@@ -3,9 +3,8 @@
 Prints ONE JSON line:
   {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
-Headline: `frontier_round` — strategy "engine": a REAL CrawlEngine in
-mode='abucket' (the persistent bucketed seen store with O(fresh)
-per-round appends) driven end-to-end over N_FRONTIER synthetic URLs
+Headline: `frontier_round` — a REAL CrawlEngine (the persistent
+bucketed seen store with O(fresh) per-round appends) driven end-to-end over N_FRONTIER synthetic URLs
 generated JVM-side with spark.range (no Python in the data path).  The
 timed window is an actual engine round pair:
   init_state  — canonicalize -> xxhash64 -> bucketed seen filter ->
@@ -18,24 +17,12 @@ Only raw URL-string generation is excluded (persisted before the
 clock).  This is stricter than the round-2 window: every snapshot write
 and manifest commit the production engine performs is inside the clock.
 
-Library-path strategies (same admission dataflow without the engine's
-snapshot persistence; see geocrawl_spark/seen.py) are kept as secondary
-metrics for continuity with BENCH_r01/r02:
-- abucket  — anti-join against a persistent bucketed seen table
-             pre-populated with n prior hashes (storage-partitioned
-             join; seen side never reshuffles);
-- anti     — pure-JVM exact xxhash64 anti-join (in-memory seen set);
-- bitword  — pure-JVM bloom bitmap as (word_id, bits) rows;
-- bloom    — sharded-blob cogroup (one Arrow crossing each way);
-- cuckoo   — same cogroup pass with the deletable cuckoo-filter codec.
-
 Also times every queries() entry at $SPARK_GRAFT_SF_DIR (default sf0.1).
 
 Env knobs: SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_SF_DIR,
 BENCH_FRONTIER_URLS (default 2_000_000), BENCH_QUERIES=0 to skip the
-query sweep, BENCH_STRATEGIES (default
-"engine,abucket,bitword,anti,bloom,cuckoo"), BENCH_REPEAT best-of-N (default
-3) — used by scripts/scaling_bench.py.
+query sweep, BENCH_REPEAT best-of-N (default 3) — used by
+scripts/scaling_bench.py.
 """
 
 from __future__ import annotations
@@ -50,43 +37,16 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from pyspark.sql import functions as F  # noqa: E402
 
 from geocrawl_spark import seen as S  # noqa: E402
-from geocrawl_spark import politeness as pol  # noqa: E402
-from geocrawl_spark.canon import canonicalize_url_expr, host_expr  # noqa: E402
 from geocrawl_spark.session import get_spark  # noqa: E402
 
 N_FRONTIER = int(os.environ.get("BENCH_FRONTIER_URLS", 2_000_000))
 N_HOSTS = 1000
-N_BUCKETS = 64  # seen-table buckets for the abucket strategy
-# 4x the max core count: balances cogroup tasks and keeps per-task pandas
-# overhead low (measured: 32 shards @ local[32] = 34s, 128 shards = 10s)
-N_SHARDS = 128
-
-
-# bitword sizing: k=4 probes at >=16 bits/key -> FPR ~0.35% — probe-row
-# volume (the shuffle cost) scales with k, so fewer/wider beats k=7 here;
-# an FP merely skips one URL, deterministically (sizing notes in seen.py).
-_BITWORD_K = 4
-
-
-def _bitword_m_bits(n: int) -> int:
-    """Smallest power of two giving >= ~16 bits/key."""
-    m = 1 << 20
-    while m < 16 * n:
-        m <<= 1
-    return m
-
-
-def _cuckoo_m_bits(n: int) -> int:
-    """Per-shard cuckoo table bits: smallest power-of-two bucket count
-    whose 4 slots hold this round's per-shard keys at <= ~85% load."""
-    need = max(1, int(n / N_SHARDS / (4 * 0.85)))
-    buckets = 1 << max(need - 1, 1).bit_length()
-    return buckets * 64  # 4 slots x 16 bits
+N_BUCKETS = 64  # seen-store buckets
 
 
 def _synthetic_inputs(spark, n: int):
-    """(raw_urls persisted+counted, budgets, robots) — shared by the
-    engine and library-path benchmarks.  Raw strings are mixed-case with
+    """(raw_urls persisted+counted, budgets, robots) for the engine
+    round.  Raw strings are mixed-case with
     redundant ports/fragments so the in-clock canonicalization pass has
     real work to do."""
     raw = (
@@ -119,7 +79,7 @@ def _synthetic_inputs(spark, n: int):
 def engine_round(
     spark, n: int | None = None, warmup: bool = True
 ) -> tuple[float, int, dict]:
-    """HEADLINE: a real CrawlEngine (mode='abucket') round pair over ``n``
+    """HEADLINE: a real CrawlEngine round pair over ``n``
     URLs — the engine's own code path end-to-end, snapshot persistence and
     manifest commits included (see module docstring for the window)."""
     import shutil
@@ -149,7 +109,6 @@ def engine_round(
         robots=robots,
         hostbudget=budgets,
         base_dir=base,
-        mode="abucket",
         n_buckets=N_BUCKETS,
         salt=8,
     )
@@ -166,116 +125,9 @@ def engine_round(
     raw.unpersist()
     for df in (eng.pages, eng.robots, eng.hostbudget):
         df.unpersist()
-    from geocrawl_spark import seen as _S
-
-    spark.sql(f"DROP TABLE IF EXISTS {_S.seen_store_name(base)}")
+    spark.sql(f"DROP TABLE IF EXISTS {S.seen_store_name(base)}")
     shutil.rmtree(base, ignore_errors=True)
     return dt, n, splits
-
-
-def frontier_round(
-    spark, n: int | None = None, warmup: bool = True, strategy: str = "bitword"
-) -> tuple[float, int]:
-    """One politeness-gated frontier round over ``n`` URLs.
-
-    Runs a 1/8-scale warmup first (codegen + python-worker spin-up) so the
-    measured pass reflects steady-state throughput, then best-of-N passes
-    (the sandbox host has noisy neighbors; min wall time is the
-    least-contended estimate of true throughput).
-    """
-    if n is None:
-        n = N_FRONTIER
-    if warmup:
-        frontier_round(spark, max(n // 8, 10_000), warmup=False, strategy=strategy)
-        repeats = int(os.environ.get("BENCH_REPEAT", "3"))
-        if repeats > 1:
-            results = [
-                frontier_round(spark, n, warmup=False, strategy=strategy)
-                for _ in range(repeats)
-            ]
-            return min(results, key=lambda r: r[0])
-    raw, budgets, robots = _synthetic_inputs(spark, n)
-    # pre-round seen state per strategy (bloom/cuckoo sized for this
-    # round's volume; production sizing notes in seen.py)
-    if strategy == "cuckoo":
-        ck_m = _cuckoo_m_bits(n)
-        shards = S.init_shards(spark, "cuckoo", N_SHARDS, ck_m, 7)
-    else:
-        shards = S.init_shards(spark, "bloom", N_SHARDS, 1 << 24, 7)
-    seen_hashes = S.init_hashes(spark)
-    bitmap = S.init_bitmap(spark)
-    bit_m = _bitword_m_bits(n)
-    if strategy == "abucket":
-        # persistent bucketed seen table, pre-populated with n prior URLs
-        # (disjoint hash domain) — the round's anti-join runs against REAL
-        # grown state, not an empty set, and never reshuffles it
-        preseen = spark.range(n).select(
-            F.xxhash64(F.format_string("preseen-%d", F.col("id"))).alias("h1")
-        )
-        S.create_bucketed_seen_table(spark, "bench_seen", N_BUCKETS, preseen)
-
-    t0 = time.time()
-    frontier = raw.select(
-        canonicalize_url_expr(F.col("raw")).alias("url"), "depth"
-    )
-    if strategy == "anti":
-        fresh, new_state, _stats, _parent = S.filter_and_update_anti(
-            frontier, seen_hashes
-        )
-    elif strategy == "abucket":
-        fresh, _append = S.filter_and_update_anti_bucketed(
-            frontier, spark, "bench_seen", N_BUCKETS
-        )
-        new_state = None
-    elif strategy == "bitword":
-        fresh, new_state, _stats, _parent = S.filter_and_update_bitmap(
-            frontier, bitmap, bit_m, _BITWORD_K
-        )
-    elif strategy == "cuckoo":
-        fresh, new_state, _ = S.filter_and_update(
-            frontier, shards, "cuckoo", N_SHARDS, ck_m, 7
-        )
-    else:
-        fresh, new_state, _ = S.filter_and_update(
-            frontier, shards, "bloom", N_SHARDS, 1 << 24, 7
-        )
-    fresh = fresh.withColumn("host", host_expr(F.col("url")))
-    # REP rules precompiled on the per-host dimension (as the engine does):
-    # the per-URL hot path only matches, never builds regexes
-    robots_rules = robots.select(
-        "host",
-        pol.robots_rules_expr(F.col("disallow"), F.col("allow")).alias("_rules"),
-    )
-    gated = (
-        fresh.join(F.broadcast(robots_rules), "host", "left")
-        .withColumn(
-            "denied", pol.robots_denied_rules_expr(F.col("url"), F.col("_rules"))
-        )
-        .filter(~F.col("denied"))
-        .withColumn("priority", F.col("depth"))
-    )
-    batch = pol.pop_batch(gated, budgets, salt=8)
-    n_batch = batch.count()
-    if strategy in ("bloom", "cuckoo"):
-        n_state = new_state.select(F.sum("n_items")).collect()[0][0]
-        dt = time.time() - t0
-    elif strategy == "abucket":
-        # state update: append fresh hashes AFTER the pop consumed fresh
-        # (insertInto is eager — the write completes inside the clock);
-        # the full-table recount below is verification, not round work
-        _append()
-        dt = time.time() - t0
-        n_state = spark.table("bench_seen").count() - n
-    else:
-        n_state = new_state.count()  # materializes the state update too
-        dt = time.time() - t0
-    assert n_batch > 0 and n_state > 0
-    raw.unpersist()
-    if strategy == "abucket":
-        fresh.unpersist()
-    if strategy in ("anti", "bitword"):
-        _parent.unpersist()
-    return dt, n
 
 
 def main():
@@ -297,21 +149,9 @@ def main():
     spark.sparkContext.setLogLevel("ERROR")
 
     queries: dict[str, float] = {}
-    strategies = os.environ.get(
-        "BENCH_STRATEGIES", "engine,abucket,bitword,anti,bloom,cuckoo"
-    ).split(",")
-    per_strategy: dict[str, float] = {}
-    splits: dict[str, float] = {}
-    for strat in strategies:
-        if strat == "engine":
-            dt, n, splits = engine_round(spark)
-            queries["frontier_round"] = round(dt, 3)
-        else:
-            dt, n = frontier_round(spark, strategy=strat)
-            queries[f"frontier_round_{strat}"] = round(dt, 3)
-        per_strategy[strat] = round(n / dt, 1)
-    # headline = the production CrawlEngine abucket round (else first listed)
-    urls_per_sec = per_strategy.get("engine") or next(iter(per_strategy.values()))
+    dt, n, splits = engine_round(spark)
+    queries["frontier_round"] = round(dt, 3)
+    urls_per_sec = n / dt
 
     if run_queries:
         from __spark_entry__ import queries as q_entries
@@ -329,10 +169,8 @@ def main():
         "metric": "frontier_urls_per_sec",
         "value": round(urls_per_sec, 1),
         "unit": "urls/sec",
-        "strategy": "engine" if "engine" in per_strategy else strategies[0],
         "total_sec": total,
         "frontier_urls": N_FRONTIER,
-        "urls_per_sec_by_strategy": per_strategy,
         "engine_round_splits": splits,
         "queries": queries,
         "sf": sf_dir,
@@ -347,7 +185,6 @@ def main():
         "metric": out["metric"],
         "value": out["value"],
         "unit": out["unit"],
-        "strategy": out["strategy"],
         "queries": {k: round(v, 2) for k, v in queries.items()},
         "sf": sf_dir,
     }

@@ -8,7 +8,8 @@ producer/scheduler/worker loop, geocrawl/geocrawler.go:43-53):
     -> fetch (join against the pages table; GDALOpenEx analog)
     -> extract text + links (vectorized UDFs; GetGDALMetadata analog)
     -> explode + resolve + canonicalize candidates (pages + assets)
-    -> ONE seen-filter cogroup pass (the walk's visit-once guarantee)
+    -> ONE seen-filter pass against the bucketed seen store (the walk's
+       visit-once guarantee)
     -> robots gate (the -re regex gate analog)
     -> admit new pending rows; extract geo-asset metadata; parse stage
     -> counters + snapshot commit (H4)
@@ -24,7 +25,7 @@ bytes, and metadata rows.
 Page and asset candidates go through a SINGLE admission pass (their URL
 classes are disjoint by construction — is_page vs is_asset predicates —
 so this is equivalent to the oracle's sequential admission and halves
-the cogroup work).
+the admission work).
 
 Scale notes (100 TB design point):
 - the pages "fetch" join shuffles on url; on a real deployment the pages
@@ -71,25 +72,6 @@ COUNTER_KEYS = [
     "fetched", "missing", "deferred_politeness", "deduped",
     "robots_denied", "discovered", "assets_extracted", "dead_letters",
 ]
-
-#: seen-filter strategies CrawlEngine can run (``mode=`` ctor arg):
-#: - exact / bloom / cuckoo: sharded-blob cogroup (seen.filter_and_update) —
-#:                  bloom is the smallest state, cuckoo adds deletability
-#:                  at ~0.012% FPR (see seen.py codec notes)
-#: - anti:          pure-JVM xxhash64 anti-join (filter_and_update_anti)
-#: - bitword:       pure-JVM bloom bitmap as word rows (filter_and_update_bitmap)
-#: - abucket:       anti-join against a PERSISTENT round-partitioned bucketed
-#:                  store; per-round state write is an O(fresh) partition
-#:                  append, never an O(seen) snapshot (the 10^10 mode)
-#:
-#: Mode guidance: exact/bloom/cuckoo/anti/bitword keep their seen state as
-#: a per-round snapshot table (write cost O(seen), growing with the crawl)
-#: — right for golden tests, debugging, and crawls below ~10^8 URLs.
-#: ``abucket`` is the PRODUCTION mode: its per-round write is O(fresh),
-#: its membership join never shuffles the seen side, and the store
-#: compacts (compact_seen_every=N) so file count stays bounded.
-SEEN_MODES = ("exact", "bloom", "cuckoo", "anti", "bitword", "abucket")
-
 
 def global_sequence(
     df: DataFrame, order_cols: list[str], scratch_path: str,
@@ -162,16 +144,11 @@ class CrawlEngine:
         robots: DataFrame,
         hostbudget: DataFrame,
         base_dir: str,
-        mode: str = "exact",
-        n_shards: int = 8,
         salt: int = pol.DEFAULT_SALT,
-        m_bits: int = 1 << 23,
-        k: int = 7,
         round_cap: int | None = None,
         n_buckets: int = 64,
         round_seconds: int = 60,
         compact_seen_every: int | None = None,
-        cache_pages: bool = False,
         host_rank: DataFrame | None = None,
         log_links: bool = False,
         adaptive_budget: bool = False,
@@ -182,16 +159,22 @@ class CrawlEngine:
         mirror_guard: bool = False,
         mirror_min: int = 4,
         use_sitemaps: bool = False,
+        *,
+        mode: str = "abucket",
     ):
+        # ``mode`` survives only as the name of the one seen-filter path
+        # (the bucketed seen store), for callers that still pass it
+        if mode != "abucket":
+            raise ValueError(
+                f"unknown seen mode {mode!r}: the bucketed seen store "
+                "('abucket') is the only seen-filter path"
+            )
         self.spark = spark
-        #: Caching the pages corpus is OPT-IN (small-corpus / test / bench
-        #: convenience): at the 100 TB design point the pages table cannot
-        #: be cached — the per-round fetch join instead relies on the
-        #: pages Iceberg table being BUCKETED BY url (storage-partitioned
-        #: join; see the module scale notes above), so the default leaves
-        #: the scan to the storage layout.
-        self.pages = pages.persist() if cache_pages else pages
-        self.cache_pages = cache_pages
+        #: The pages corpus is never cached: at the 100 TB design point the
+        #: per-round fetch join relies on the pages Iceberg table being
+        #: BUCKETED BY url (storage-partitioned join; see the module scale
+        #: notes above), so the scan is left to the storage layout.
+        self.pages = pages
         self.seeds = seeds
         # robots(host, disallow[, allow[, crawl_delay]]): REP longest-match
         # rules with wildcards and Allow-overrides-Disallow (politeness.py).
@@ -213,13 +196,11 @@ class CrawlEngine:
         #: nominal round of ``round_seconds``.
         self.round_seconds = round_seconds
         self.io = TableIO(base_dir)
-        self.mode, self.n_shards, self.salt, self.m_bits, self.k = (
-            mode, n_shards, salt, m_bits, k,
-        )
-        #: abucket mode: bucket count of the persistent seen store (the
-        #: Iceberg ``bucket(N, h1)`` width on a real deployment)
+        self.salt = salt
+        #: bucket count of the persistent seen store (the Iceberg
+        #: ``bucket(N, h1)`` width on a real deployment)
         self.n_buckets = n_buckets
-        #: abucket mode: compact the seen store every N committed rounds
+        #: compact the seen store every N committed rounds
         #: (seen.compact_seen_store — bounds the store's file count, which
         #: otherwise grows one partition x n_buckets files per round).
         #: None = never (callers may invoke compact_seen() themselves).
@@ -366,67 +347,39 @@ class CrawlEngine:
         self.round_cap = round_cap
 
     # ------------------------------------------------------------------
-    def _init_seen_state(self) -> DataFrame | None:
-        if self.mode in ("exact", "bloom", "cuckoo"):
-            return S.init_shards(
-                self.spark, self.mode, self.n_shards, self.m_bits, self.k
-            )
-        if self.mode == "anti":
-            return S.init_hashes(self.spark)
-        if self.mode == "bitword":
-            return S.init_bitmap(self.spark)
-        if self.mode == "abucket":
-            # state lives in the persistent bucketed store, not a snapshot df
-            S.ensure_seen_store(self.spark, self.io.base, self.n_buckets, fresh=True)
-            return None
-        raise ValueError(f"unknown seen mode {self.mode!r}; one of {SEEN_MODES}")
-
     def _seen_table(self) -> str:
-        """Register-on-demand handle to the abucket persistent store (cheap
+        """Register-on-demand handle to the persistent seen store (cheap
         when already registered; re-registers + recovers partitions when
         resuming in a fresh session)."""
         return S.ensure_seen_store(self.spark, self.io.base, self.n_buckets)
 
-    def _state_tables(self) -> list[str]:
-        """Snapshot tables that carry seen state (abucket keeps its state
-        in the round-partitioned store instead — O(fresh) appends)."""
-        return [] if self.mode == "abucket" else ["seen_shards"]
-
     @staticmethod
     def _stats_dict(stats_df: DataFrame) -> dict:
-        has_denied = "n_denied" in stats_df.columns
         return {
             r["kind"]: {
                 "candidates": int(r["n_cand"]),
                 "fresh": int(r["n_fresh"]),
                 "deduped": int(r["n_cand"] - r["n_fresh"]),
-                **({"denied": int(r["n_denied"])} if has_denied else {}),
+                "denied": int(r["n_denied"]),
             }
             for r in stats_df.collect()
         }
 
-    def _admit(self, cand: DataFrame, state: DataFrame | None, round_no: int):
-        """Candidates (url, depth, kind) -> flagged fresh rows + state'.
+    def _admit(self, cand: DataFrame, round_no: int):
+        """Candidates (url, depth, kind) -> flagged fresh rows.
 
-        One seen-filter pass (strategy per ``self.mode``) does
-        within-batch dedup + seen-test + state update + per-kind stats;
-        robots are checked on the fresh survivors only.  Returns
-        (flagged, parents, stats_fn, new_state, append_fn); ``stats_fn()``
-        yields {kind: {candidates, fresh, deduped, denied}} in ONE
-        driver-blocking call (a single combined aggregate in abucket
-        mode; two internally-overlapped actions in the snapshot modes).
-        Every df in ``parents`` is persisted, and so is ``flagged`` in the
-        snapshot modes; in abucket mode ``flagged`` is an unpersisted view
-        over ``flagged_all`` (its one parent).  The caller unpersists
-        ``flagged`` and ``parents`` once the round's writes have returned.
+        One seen-filter pass against the bucketed seen store does
+        within-batch dedup + seen-test + per-kind stats, and decorates
+        every deduped candidate with its host and robots verdict.
+        Returns (flagged, parents, stats_fn, append_fn); ``stats_fn()``
+        yields {kind: {candidates, fresh, deduped, denied}} from ONE
+        combined aggregate.  ``flagged`` is an unpersisted view over
+        ``flagged_all``, the one persisted parent; the caller unpersists
+        ``parents`` once the round's writes have returned.
 
-        The seen-state update is one of two shapes.  Snapshot modes
-        return ``new_state``, the full ``seen_shards`` snapshot, written
-        with the round's other writes (a plain parquet path write).
-        abucket returns ``append_fn(urls)``, the O(fresh) partition
-        append into the bucketed store, called on the round's written
-        ``admitted`` table AFTER the unpersist (see
-        :func:`seen.filter_and_update_abucket_flagged`).
+        ``append_fn(urls)`` is the O(fresh) partition append into the
+        store, called on the round's written ``admitted`` table AFTER
+        the unpersist (see :func:`seen.filter_and_update_abucket_flagged`).
         """
         def _robots_cols(df: DataFrame) -> DataFrame:
             return (
@@ -443,81 +396,35 @@ class CrawlEngine:
                 .drop("_rules")
             )
 
-        if self.mode == "abucket":
-            # single-materialization admission (guide §5): the seen flag,
-            # the robots decoration, the stats and the fresh rows all read
-            # ONE persisted pass over the deduped candidates instead of
-            # three chained persists
-            flagged_all, _stats_df, append_fn = S.filter_and_update_abucket_flagged(
-                cand, self.spark, self._seen_table(), self.n_buckets,
-                upto_round=round_no - 1, round_no=round_no,
-                decorate=_robots_cols,
-            )
-            flagged = flagged_all.filter(F.col("_seen").isNull()).select(
-                "url", "host", "depth", "kind", "denied"
-            )
-            # ONE combined stats action (guide §5): per-kind candidate /
-            # fresh / denied counts in a single aggregate over the one
-            # persisted admission pass.  The old form ran the kind stats
-            # and the denied count as two CONCURRENT first-touch jobs
-            # over the same not-yet-materialized cache — racing partitions
-            # compute the 2M-row canon->hash->membership chain roughly
-            # twice; a single job materializes the cache exactly once.
-            stats_all = flagged_all.groupBy("kind").agg(
-                F.count("*").alias("n_cand"),
-                F.count(F.when(F.col("_seen").isNull(), True)).alias("n_fresh"),
-                F.count(
-                    F.when(F.col("_seen").isNull() & F.col("denied"), True)
-                ).alias("n_denied"),
-            )
-            return flagged, [flagged_all], (
-                lambda: self._stats_dict(stats_all)
-            ), None, append_fn
-        if self.mode in ("exact", "bloom", "cuckoo"):
-            fresh, new_state, seen_out = S.filter_and_update(
-                cand, state, self.mode, self.n_shards, self.m_bits, self.k
-            )
-            parents, stats_fn = [seen_out], lambda: S.admission_stats(seen_out)
-        elif self.mode == "anti":
-            fresh, new_state, stats_df, parent = S.filter_and_update_anti(cand, state)
-            parents, stats_fn = [parent], lambda: self._stats_dict(stats_df)
-        else:  # bitword
-            fresh, new_state, stats_df, parent = S.filter_and_update_bitmap(
-                cand, state, self.m_bits, self.k
-            )
-            parents, stats_fn = [parent], lambda: self._stats_dict(stats_df)
-        flagged = (
-            _robots_cols(fresh)
-            .select("url", "host", "depth", "kind", "denied")
-            .persist()
+        # single-materialization admission (guide §5): the seen flag,
+        # the robots decoration, the stats and the fresh rows all read
+        # ONE persisted pass over the deduped candidates instead of
+        # three chained persists
+        flagged_all, _stats_df, append_fn = S.filter_and_update_abucket_flagged(
+            cand, self.spark, self._seen_table(), self.n_buckets,
+            upto_round=round_no - 1, round_no=round_no,
+            decorate=_robots_cols,
         )
-        base_stats_fn = stats_fn
-
-        def stats_fn() -> dict:  # type: ignore[no-redef]
-            # snapshot modes keep two actions (the dedup stats live on the
-            # seen-filter parents, denied on the decorated fresh rows) —
-            # overlapped here exactly as the callers used to, but behind
-            # the same combined-dict contract the abucket branch returns
-            with ThreadPoolExecutor(max_workers=2) as p:
-                f_s = p.submit(base_stats_fn)
-                f_d = p.submit(
-                    lambda: {
-                        r["kind"]: int(r["n"])
-                        for r in flagged.filter(F.col("denied"))
-                        .groupBy("kind")
-                        .agg(F.count("*").alias("n"))
-                        .collect()
-                    }
-                )
-                s, dn = f_s.result(), f_d.result()
-            for k in s:
-                s[k]["denied"] = dn.get(k, 0)
-            for k, n in dn.items():
-                if k not in s:
-                    s[k] = {"candidates": 0, "fresh": 0, "deduped": 0, "denied": n}
-            return s
-
-        return flagged, parents, stats_fn, new_state, None
+        flagged = flagged_all.filter(F.col("_seen").isNull()).select(
+            "url", "host", "depth", "kind", "denied"
+        )
+        # ONE combined stats action (guide §5): per-kind candidate /
+        # fresh / denied counts in a single aggregate over the one
+        # persisted admission pass.  The old form ran the kind stats
+        # and the denied count as two CONCURRENT first-touch jobs
+        # over the same not-yet-materialized cache — racing partitions
+        # compute the 2M-row canon->hash->membership chain roughly
+        # twice; a single job materializes the cache exactly once.
+        stats_all = flagged_all.groupBy("kind").agg(
+            F.count("*").alias("n_cand"),
+            F.count(F.when(F.col("_seen").isNull(), True)).alias("n_fresh"),
+            F.count(
+                F.when(F.col("_seen").isNull() & F.col("denied"), True)
+            ).alias("n_denied"),
+        )
+        return flagged, [flagged_all], (
+            lambda: self._stats_dict(stats_all)
+        ), append_fn
 
     def _empty_carry(self) -> DataFrame:
         return self.spark.createDataFrame([], "host string, carry long")
@@ -753,11 +660,8 @@ class CrawlEngine:
         after every write has returned."""
         marks: list = []
         self._mark(marks, "start")
-        self.io.set_meta(
-            "seen_config",
-            [self.mode, self.n_shards, self.m_bits, self.k, self.n_buckets],
-        )
-        state = self._init_seen_state()
+        self.io.set_meta("seen_config", {"n_buckets": self.n_buckets})
+        S.ensure_seen_store(self.spark, self.io.base, self.n_buckets, fresh=True)
         self._mark(marks, "seen_init")
         seeds = self.seeds.select(
             canonicalize_url_expr("url").alias("url"),
@@ -786,9 +690,7 @@ class CrawlEngine:
                 )
             )
             seeds = seeds.unionByName(sitemaps)
-        flagged, parents, stats_fn, new_state, append_seen = self._admit(
-            seeds, state, 0
-        )
+        flagged, parents, stats_fn, append_seen = self._admit(seeds, 0)
         counters = {k: 0 for k in COUNTER_KEYS}
         with ThreadPoolExecutor(max_workers=8) as pool:
             f_stats = pool.submit(stats_fn)
@@ -812,10 +714,6 @@ class CrawlEngine:
                 pool.submit(self.io.write_table, self._empty_carry(), "hostcarry", 0),
                 pool.submit(self._write_counters, counters, 0),
             ]
-            if new_state is not None:
-                writes.append(
-                    pool.submit(self.io.write_table, new_state, "seen_shards", 0)
-                )
             if self.adaptive_budget:
                 # round 0 pops nothing — seed the feedback loop empty so
                 # round 1's hosterr read always resolves (incl. on resume)
@@ -872,10 +770,9 @@ class CrawlEngine:
             for w in writes:
                 w.result()  # propagate failures BEFORE the commit point
             self._mark(marks, "writes_joined")
-        for df in (flagged, *parents):
+        for df in parents:
             df.unpersist()
-        if append_seen is not None:
-            append_seen(self.io.read_table(self.spark, "admitted", 0))
+        append_seen(self.io.read_table(self.spark, "admitted", 0))
         self._mark(marks, "seen_persist")
         if os.environ.get("GEOCRAWL_PROFILE"):
             spans = [
@@ -885,7 +782,7 @@ class CrawlEngine:
             print("[init_state] " + " ".join(spans), flush=True)
         self.io.commit_round(
             0,
-            ["frontier", *self._state_tables(), "admitted", "hostcarry",
+            ["frontier", "admitted", "hostcarry",
              "crawl_log", "hosterr", "hostqual", "hosttrap", "hostdup"],
         )
         return counters
@@ -911,11 +808,6 @@ class CrawlEngine:
         marks: list = []
         self._mark(marks, "start")
         frontier = self.io.read_table(self.spark, "frontier", round_no - 1)
-        state = (
-            None
-            if self.mode == "abucket"
-            else self.io.read_table(self.spark, "seen_shards", round_no - 1)
-        )
         pending = frontier.filter(F.col("status") == "pending")
         # ONE pending scan serves both the round-entry count and the
         # per-host lineage: materialize the per-host pending counts first
@@ -1043,22 +935,15 @@ class CrawlEngine:
                 # analysis of the big parse expression trees) per round.  The
                 # per-round tables they would have written empty are simply
                 # absent — read_all_rounds unions only existing paths, and the
-                # pyref oracle produces the same zero counters.  Snapshot modes
-                # still carry the (unchanged) seen state forward, since the
-                # next round reads seen_shards@round_no; the abucket store
-                # needs no write at all (absent partition == no new hashes).
+                # pyref oracle produces the same zero counters.  The seen
+                # store needs no write at all (absent partition == no new
+                # hashes).
                 flagged = self.spark.createDataFrame(
                     [], "url string, host string, depth long, kind string, denied boolean"
                 ).persist()
                 kinded = None
                 parents, parsed = [], None
                 f_nassets = f_ndead = None
-                if self.mode != "abucket":
-                    # carry the unchanged seen state forward — a plain parquet
-                    # path write (no catalog invalidation), safe in the pool
-                    writes.append(
-                        pool.submit(self.io.write_table, state, "seen_shards", round_no)
-                    )
                 if self.quality_rank:
                     # nothing fetched -> quality history unchanged; carry it
                     writes.append(
@@ -1069,7 +954,7 @@ class CrawlEngine:
                 if self.mirror_guard:
                     # nothing fetched -> dup history unchanged; carry it
                     # (no contenthash write: absent partition == no new
-                    # hashes, the abucket precedent)
+                    # hashes, the seen-store precedent)
                     writes.append(
                         pool.submit(
                             self.io.write_table, prev_dup, "hostdup", round_no
@@ -1345,8 +1230,8 @@ class CrawlEngine:
                 )
 
                 # --- single admission pass (seen filter + robots) ------------
-                flagged, parents, stats_fn, new_state, append_seen = (
-                    self._admit(cand, state, round_no)
+                flagged, parents, stats_fn, append_seen = self._admit(
+                    cand, round_no
                 )
                 f_stats = pool.submit(stats_fn)
                 stats = f_stats.result()
@@ -1387,12 +1272,6 @@ class CrawlEngine:
                         flagged.select("url", "kind"), "admitted", round_no,
                     )
                 )
-                if new_state is not None:
-                    writes.append(
-                        pool.submit(
-                            self.io.write_table, new_state, "seen_shards", round_no
-                        )
-                    )
                 self._mark(marks, "tail_submitted")
 
             # --- per-host lineage (north_rule: per-partition lineage+metrics;
@@ -1504,7 +1383,7 @@ class CrawlEngine:
                        ch_marked, kinded, *parents):
                 if df is not None:
                     df.unpersist()
-        # The abucket append runs once every cache above is dropped: its
+        # The seen-store append runs once every cache above is dropped: its
         # insertInto on the seen-store catalog table makes Spark re-plan
         # each cached plan that scans the store (the admission pass and
         # everything derived from it), seconds per plan, and a dropped
@@ -1515,7 +1394,7 @@ class CrawlEngine:
         self._mark(marks, "seen_persist")
         self.io.commit_round(
             round_no,
-            ["frontier", *self._state_tables(), "admitted", "hostcarry",
+            ["frontier", "admitted", "hostcarry",
              "crawl_log", "extracted", "metadata", "dead_letters", "host_log",
              "links",  # opt-in link-graph log (declared only when written)
              "sitemapmeta",  # opt-in sitemap lastmod freshness (ditto)
@@ -1580,12 +1459,11 @@ class CrawlEngine:
             if self.io.latest_round() is None:
                 self.init_state()
             else:
-                # resuming: the seen-state layout is config-dependent
-                # (shard routing / bloom geometry); a mismatched engine
-                # would silently re-admit seen URLs
+                # resuming: the seen store's bucket layout is fixed at
+                # creation; an engine with another bucket count would read
+                # it with a mismatched layout
                 want = self.io.get_meta("seen_config")
-                have = [self.mode, self.n_shards, self.m_bits, self.k,
-                        self.n_buckets]
+                have = {"n_buckets": self.n_buckets}
                 if want is not None and want != have:
                     raise ValueError(
                         f"resume config mismatch: snapshot has {want}, "
@@ -1598,11 +1476,7 @@ class CrawlEngine:
             if res.pop("done"):
                 break
             log.append({"round": r, **res})
-            if (
-                self.mode == "abucket"
-                and self.compact_seen_every
-                and r % self.compact_seen_every == 0
-            ):
+            if self.compact_seen_every and r % self.compact_seen_every == 0:
                 self.compact_seen(r)
             r += 1
         return log
@@ -1674,11 +1548,7 @@ class CrawlEngine:
         this is "point the fetch join at the current WARC/Iceberg
         snapshot" — an O(1) metadata operation, which is exactly what it
         is here."""
-        if self.cache_pages:
-            self.pages.unpersist()
-            self.pages = pages.persist()
-        else:
-            self.pages = pages
+        self.pages = pages
 
     def refresh(self, urls: DataFrame) -> int:
         """RECRAWL: re-queue already-crawled URLs for fetching — the
@@ -1695,13 +1565,12 @@ class CrawlEngine:
         No seen-filter retraction is needed: the seen filter gates NEW
         candidate admission, and a refreshed url is already IN the
         frontier — its re-extracted links simply dedupe against the seen
-        set (counted, like any repeat observation).  Works in every seen
-        mode for the same reason.
+        set (counted, like any repeat observation).
 
         Commit shape: one MERGE delta on the frontier touching ONLY the
         BFS layers containing refreshed rows (O(selected layers), never
-        O(frontier)) + unchanged seen/hostcarry snapshots carried
-        forward, committed as a round of its own (no crawl_log /
+        O(frontier)) + the unchanged hostcarry snapshot carried forward
+        (the seen store needs no write), committed as a round of its own (no crawl_log /
         host_log rows — the manifest records exactly what a refresh
         wrote).  A kill mid-refresh leaves the previous round intact
         (the manifest rename is the commit point, as everywhere).
@@ -1745,22 +1614,13 @@ class CrawlEngine:
         self.io.write_table_delta(
             rewritten, "frontier", round_no, "discovered_round", touched, r_prev
         )
-        if self.mode != "abucket":
-            # snapshot modes: next round reads seen_shards@round_no — carry
-            # the unchanged state forward (abucket's store needs no write:
-            # an absent round partition is simply no new hashes)
-            self.io.write_table(
-                self.io.read_table(self.spark, "seen_shards", r_prev),
-                "seen_shards",
-                round_no,
-            )
         self.io.write_table(
             self.io.read_table(self.spark, "hostcarry", r_prev), "hostcarry", round_no
         )
         if self.adaptive_budget:
             # adaptive engines read hosterr@round-1 unconditionally in
             # run_round — carry the last crawl round's feedback forward
-            # (like hostcarry/seen_shards) or the first post-refresh round
+            # (like hostcarry) or the first post-refresh round
             # dies on a missing table and the committed refresh round
             # poisons every subsequent run() until a manual rollback
             self.io.write_table(
@@ -1796,19 +1656,17 @@ class CrawlEngine:
             )
         self.io.commit_round(
             round_no,
-            ["frontier", *self._state_tables(), "hostcarry", "hosterr",
+            ["frontier", "hostcarry", "hosterr",
              "hostqual", "hosttrap", "hostdup"],
         )
         return int(n_sel)
 
     def compact_seen(self, upto_round: int) -> dict | None:
-        """Compact the abucket seen store's partitions ``<= upto_round``
-        into its base partition (manifest-gated; no-op for other modes).
-        Safe whenever ``upto_round`` is committed — in-flight rounds only
-        ever read ``round <= committed`` and the merged rows stay visible
-        under the (negative) base partition id."""
-        if self.mode != "abucket":
-            return None
+        """Compact the seen store's partitions ``<= upto_round`` into its
+        base partition (manifest-gated).  Safe whenever ``upto_round`` is
+        committed — in-flight rounds only ever read ``round <= committed``
+        and the merged rows stay visible under the (negative) base
+        partition id."""
         return S.compact_seen_store(
             self.spark, self.io.base, self.n_buckets, upto_round, io=self.io
         )

@@ -6,13 +6,12 @@ single-threaded pyref oracle (pyref.py) needs bit-identical hashes
 without a JVM, so we carry this ~60-line reference implementation and
 unit-test it against Spark (tests/test_hashing.py).
 
-Used for: URL-seen shard routing (shard = h % n_shards), bloom-filter
-double hashing, and deterministic synthetic-data generation.
+Used for: the oracle's URL-seen and content-hash sets (the engine's
+``xxhash64(url)`` / ``xxhash64(text)`` keys) and deterministic
+synthetic-data generation.
 """
 
 from __future__ import annotations
-
-import numpy as np
 
 _P1 = 0x9E3779B185EBCA87
 _P2 = 0xC2B2AE3D27D4EB4F
@@ -91,18 +90,3 @@ def xxh64_signed(data: bytes, seed: int = SPARK_XXHASH_SEED) -> int:
 def url_hash(url: str) -> int:
     """Signed 64-bit hash of a URL — identical to ``F.xxhash64(col)``."""
     return xxh64_signed(url.encode("utf-8"))
-
-
-def url_hash2(url: str) -> int:
-    """Second independent hash — identical to ``F.xxhash64(concat(col, '#h2'))``."""
-    return xxh64_signed((url + "#h2").encode("utf-8"))
-
-
-def shard_of(h: int, n_shards: int) -> int:
-    """Shard id from a signed 64-bit hash — identical to ``F.pmod(h, n)``."""
-    return h % n_shards  # Python % is already the positive mod for n>0
-
-
-def hashes_to_uint64(h: "np.ndarray") -> "np.ndarray":
-    """Reinterpret an int64 hash array as uint64 (vectorized, no copy)."""
-    return np.asarray(h, dtype=np.int64).view(np.uint64)

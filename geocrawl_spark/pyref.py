@@ -29,7 +29,7 @@ from .assets import (
 )
 from .canon import canonicalize_url, host_of
 from .gdalmeta import fake_gdal_file_py, proj4_of_wkt_py
-from .hashing import xxh64_signed
+from .hashing import url_hash, xxh64_signed
 from .geometry import polygon_wkt_py
 from .parsers import parse_name_py
 from .politeness import (
@@ -38,7 +38,6 @@ from .politeness import (
     PRIO_SCALE,
     robots_denied_py,
 )
-from .seen import PySeenFilter
 
 
 def _parse_rfc3339(s: str):
@@ -54,10 +53,6 @@ class PyRefCrawl:
         seeds: pd.DataFrame,
         robots: pd.DataFrame,
         hostbudget: pd.DataFrame,
-        mode: str = "exact",
-        n_shards: int = 8,
-        m_bits: int = 1 << 23,
-        k: int = 7,
         carryover: bool = True,
         round_cap: int | None = None,
         round_seconds: int = 60,
@@ -147,7 +142,8 @@ class PyRefCrawl:
         self.sitemap_lastmod: dict[str, _dt.datetime] = {}
         self.fetched_ts: dict = {}
         self.content_seen: set[int] = set()
-        self.seen = PySeenFilter(mode, n_shards, m_bits, k)
+        # URL-seen set: url_hash(url) == the engine's h1 = xxhash64(url)
+        self.seen: set[int] = set()
         self.frontier: dict[str, dict] = {}
         self.admitted: list[tuple[str, str]] = []
         self.crawl_order: list[tuple[int, int, str]] = []
@@ -161,15 +157,26 @@ class PyRefCrawl:
 
     # ------------------------------------------------------------------
     def _admit(self, cands: dict[str, tuple[int, str]], round_no: int):
-        """Single-batch admission over page+asset candidates together:
-        test-all-then-insert (matches the Spark cogroup's per-shard
-        semantics exactly, including any deterministic bloom FPs).
+        """Single-batch admission over page+asset candidates together,
+        keyed like the engine's seen store: within-batch dedup per
+        h1 = url_hash(url) to the min (depth, url), test every survivor
+        against the seen set as it stood before the batch, then insert
+        the fresh hashes.
 
         ``cands`` maps url -> (depth, kind).  Returns (rows, deduped,
         denied_by_kind) where rows carry the kind.
         """
         n_cand = len(cands)
-        fresh = self.seen.add_batch(sorted(cands))
+        best: dict[int, str] = {}
+        for u, (depth, _kind) in cands.items():
+            h = url_hash(u)
+            if h in self.seen:
+                continue
+            b = best.get(h)
+            if b is None or (depth, u) < (cands[b][0], b):
+                best[h] = u
+        self.seen.update(best)
+        fresh = sorted(best.values())
         rows = []
         denied_by_kind = {"page": 0, "asset": 0}
         for u in fresh:

@@ -14,6 +14,20 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Driver heap when ``SPARK_GRAFT_DRIVER_MEM`` is unset: 3/8 of host
+    memory, at most 24g.  In local mode the driver JVM holds every
+    executor thread, and its resident size runs well past the heap
+    (off-heap shuffle and Arrow buffers, metaspace), so a fixed 24g
+    heap outgrows a 16 GB host."""
+    try:
+        with open("/proc/meminfo") as fh:
+            kb = next(int(ln.split()[1]) for ln in fh if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration):
+        return "24g"
+    return f"{min(24 * 1024, kb * 3 // 8 // 1024)}m"
+
+
 def get_spark(
     app_name: str = "geocrawl_spark",
     master: str | None = None,
@@ -53,10 +67,14 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.session.timeZone", "UTC")
         # NOTE: partitionOverwriteMode stays at the Spark default (static);
-        # the abucket seen-store append scopes dynamic mode to its own
-        # write via DataFrameWriter.option (seen.py) so session overwrite
-        # semantics are never silently changed (ADVICE r3).
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        # the seen-store writes set dynamic mode on the session only
+        # around their own insert and restore it after (a writer option
+        # cannot express that insert; see seen._overwrite_partitions), so
+        # session overwrite semantics are never silently changed.
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
+        )
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
         .config("spark.executorEnv.PYTHONPATH", os.environ["PYTHONPATH"])

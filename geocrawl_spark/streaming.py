@@ -108,9 +108,9 @@ def _seen_filter_fn(key, pdf_iter, state):
     """Per-shard stateful filter: emit only FIRST-seen url hashes.
 
     State is the shard's seen set packed as a sorted int64 blob (one
-    binary state column — the same packed-hash representation as the
-    batch bloom shards); membership tests are vectorized np.isin per
-    Arrow chunk, never per-row Python.
+    binary state column of the same xxhash64 keys the batch seen store
+    holds); membership tests are vectorized np.isin per Arrow chunk,
+    never per-row Python.
     """
     import numpy as np
 
@@ -140,15 +140,13 @@ def streaming_seen_filter(pages: DataFrame, n_shards: int = 8) -> DataFrame:
     set in operator state, so a url is emitted the FIRST time it is ever
     observed and suppressed in every later micro-batch (and later in the
     same batch).  Mirrors the batch engine's admission contract
-    (canonicalize -> hash -> shard -> test-and-insert, seen.py).
+    (canonicalize -> hash -> test-and-insert, seen.py).
 
     Scale notes: state is hash-partitioned across ``n_shards`` groups
-    (executor-parallel, same layout as the batch bloom shards); the
-    packed-int64 state grows O(seen/shard) — a production deployment at
-    10^10 urls swaps the exact blob for the same bloom bitmap the batch
-    path uses (identical state plumbing, lossy-FP contract), or drains
-    the stream into engine rounds via foreachBatch + the abucket store
-    (the tested ingest seam, test_stream_ingested_pages_drive_engine).
+    (executor-parallel); the packed-int64 state grows O(seen/shard) — a
+    production deployment at 10^10 urls drains the stream into engine
+    rounds via foreachBatch + the bucketed seen store instead (the
+    tested ingest seam, test_stream_ingested_pages_drive_engine).
     """
     from pyspark.sql.streaming.state import GroupStateTimeout
 

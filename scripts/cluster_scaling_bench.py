@@ -147,7 +147,6 @@ def run_level(n_exec: int, exec_cores: int, exec_mem: str, n_urls: int) -> dict:
         env["SPARK_GRAFT_CPUS"] = str(total)  # shuffle partitions = 2x
         env["BENCH_QUERIES"] = "0"
         env["BENCH_FRONTIER_URLS"] = str(n_urls)
-        env["BENCH_STRATEGIES"] = env.get("BENCH_STRATEGIES", "engine")
         env.setdefault("BENCH_REPEAT", "3")
         env["PYSPARK_PYTHON"] = sys.executable
         env["SPARK_GRAFT_DRIVER_MEM"] = env.get("SPARK_GRAFT_DRIVER_MEM", "12g")
@@ -174,13 +173,13 @@ def run_level(n_exec: int, exec_cores: int, exec_mem: str, n_urls: int) -> dict:
             sys.stderr.write(out.stdout[-4000:] + "\n" + out.stderr[-4000:] + "\n")
             raise RuntimeError(f"no JSON line from bench at {n_exec} executors")
         # bench prints the FULL record then a slim last line (driver tail
-        # window); take the last line carrying the per-strategy map
+        # window); take the last full record
         for line in reversed(lines):
             rec = json.loads(line)
-            if "urls_per_sec_by_strategy" in rec:
+            if "frontier_urls" in rec:
                 return rec
         raise RuntimeError(
-            f"no full bench record (urls_per_sec_by_strategy) at {n_exec} executors"
+            f"no full bench record (frontier_urls) at {n_exec} executors"
         )
     finally:
         stop_cluster(procs)
@@ -199,7 +198,7 @@ def main():
         runs[n_exec] = run_level(n_exec, exec_cores, exec_mem, n_urls)
         print(
             f"{n_exec} executors x {exec_cores}c: "
-            f"{runs[n_exec]['urls_per_sec_by_strategy']}",
+            f"{runs[n_exec]['value']} urls/sec",
             flush=True,
         )
     if len(levels) < 2:  # single-level smoke run: report and stop
@@ -207,16 +206,15 @@ def main():
         return
     lo, hi = levels
     ratio = hi / lo
-    strat = os.environ.get("BENCH_STRATEGIES", "engine").split(",")[0]
-    thr_lo = runs[lo]["urls_per_sec_by_strategy"][strat]
-    thr_hi = runs[hi]["urls_per_sec_by_strategy"][strat]
+    thr_lo = runs[lo]["value"]
+    thr_hi = runs[hi]["value"]
     eff = round((thr_hi / thr_lo) / ratio, 3)
     result = {
         "n_urls": n_urls,
         "levels": list(levels),
         "exec_cores": exec_cores,
         "topology": "standalone cluster, 1 executor JVM per worker JVM",
-        strat: {
+        "engine": {
             f"urls_per_sec_{lo}exec": thr_lo,
             f"urls_per_sec_{hi}exec": thr_hi,
             "scaling_efficiency": eff,
@@ -228,7 +226,7 @@ def main():
     stamp = datetime.datetime.now(datetime.timezone.utc).isoformat(timespec="seconds")
     with open(path, "a") as f:
         f.write(
-            f"| {stamp} (STANDALONE {strat}, {lo}->{hi} executors x "
+            f"| {stamp} (STANDALONE engine, {lo}->{hi} executors x "
             f"{exec_cores}c) | {n_urls} | {thr_lo} | {thr_hi} | {eff} |\n"
         )
 

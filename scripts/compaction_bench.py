@@ -1,9 +1,9 @@
 """Membership-scan cost vs seen-store round count, with and without
 compaction (VERDICT r3 missing #2 'done' evidence).
 
-Builds an abucket seen store the way a long crawl does — one
-``round=N`` partition x n_buckets files appended per round — then times
-the per-round membership pass (the engine's filter_and_update_abucket)
+Builds a seen store the way a long crawl does — one ``round=N``
+partition x n_buckets files appended per round — then times the
+per-round admission pass (the engine's filter_and_update_abucket_flagged)
 against the many-partition store, compacts it with
 seen.compact_seen_store, and re-times the identical pass.  Appends a
 table to BENCH/BASELINE.md: file counts and membership wall time flat
@@ -44,8 +44,8 @@ def n_files(base: str) -> int:
 
 
 def membership_time(spark, table: str, upto: int, round_no: int) -> float:
-    """Best-of-2 wall time of one full membership pass (within-batch dedup
-    + anti-join against the store) over N_CAND candidates."""
+    """Best-of-2 wall time of one full admission pass (within-batch dedup
+    + seen flag against the store) over N_CAND candidates."""
     cand = spark.range(N_CAND).select(
         F.format_string("http://h%d.org/p/%d.html", F.col("id") % 97, F.col("id")).alias(
             "url"
@@ -55,13 +55,12 @@ def membership_time(spark, table: str, upto: int, round_no: int) -> float:
     best = float("inf")
     for _ in range(2):
         t0 = time.time()
-        fresh, _stats, parents, _append = S.filter_and_update_abucket(
+        flagged, _stats, _append = S.filter_and_update_abucket_flagged(
             cand, spark, table, N_BUCKETS, upto_round=upto, round_no=round_no
         )
-        n = fresh.count()
+        n = flagged.filter(F.col("_seen").isNull()).count()
         best = min(best, time.time() - t0)
-        for p in parents:
-            p.unpersist()
+        flagged.unpersist()
         assert n > 0
     return best
 
@@ -82,15 +81,13 @@ def main():
         h = spark.range(r * N_PER_ROUND, (r + 1) * N_PER_ROUND).select(
             F.xxhash64(F.format_string("seen-%d", F.col("id"))).alias("h1")
         )
-        conf = spark.conf
-        prev = conf.get("spark.sql.sources.partitionOverwriteMode")
-        conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
+        S._overwrite_partitions(
+            spark,
             h.repartition(N_BUCKETS, "h1").select(
                 "h1", F.lit(r).cast("long").alias("round")
-            ).write.mode("overwrite").insertInto(table)
-        finally:
-            conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+            ),
+            table,
+        )
         if r in checkpoints:
             samples.append(
                 (r, n_files(base), membership_time(spark, table, r, r + 1))
@@ -117,7 +114,7 @@ def main():
             f"\n### Seen-store compaction ({stamp}, scripts/compaction_bench.py)\n\n"
             f"Store grown {N_ROUNDS} rounds x {N_PER_ROUND} hashes "
             f"({N_BUCKETS} buckets); membership pass = within-batch dedup + "
-            f"anti-join of {N_CAND} candidates (best of 2).  Compaction "
+            f"seen flag of {N_CAND} candidates (best of 2).  Compaction "
             f"(seen.compact_seen_store) rewrote all round partitions into "
             f"one base partition in {compact_dt:.2f}s.\n\n"
             "| state | rounds | files | membership sec |\n|---|---|---|---|\n"

@@ -23,7 +23,6 @@ def run_at(cpus: int, n_urls: int) -> dict:
     env["SPARK_GRAFT_CPUS"] = str(cpus)
     env["BENCH_QUERIES"] = "0"
     env["BENCH_FRONTIER_URLS"] = str(n_urls)
-    env.setdefault("BENCH_STRATEGIES", "engine")
     env.setdefault("BENCH_REPEAT", "3")  # best-of-3 (noisy shared host)
     cmd = [sys.executable, os.path.join(REPO, "bench.py")]
     # pin the N-core run to N hardware threads so its JVM/GC/shuffle
@@ -38,17 +37,16 @@ def run_at(cpus: int, n_urls: int) -> dict:
         timeout=int(os.environ.get("BENCH_LEVEL_TIMEOUT", "2400")),
     )
     # bench prints the FULL record then a slim last line (driver tail
-    # window); take the last line that carries the per-strategy map
+    # window); take the last full record
     for line in reversed([l for l in out.stdout.splitlines() if l.startswith("{")]):
         rec = json.loads(line)
-        if "urls_per_sec_by_strategy" in rec:
+        if "frontier_urls" in rec:
             return rec
-    raise RuntimeError("no full bench record (urls_per_sec_by_strategy) in output")
+    raise RuntimeError("no full bench record (frontier_urls) in output")
 
 
 def main():
     n_urls = int(os.environ.get("BENCH_FRONTIER_URLS", 4_000_000))
-    strategies = os.environ.get("BENCH_STRATEGIES", "engine").split(",")
     # N and 4N cores; default 8->32.  BENCH_LEVELS=2,8 measures the
     # algorithmic scaling BELOW the single-box memory-bus saturation
     # point (a taskset-pinned local[8] still owns the full uncore, which
@@ -61,20 +59,16 @@ def main():
     for cpus in levels:
         # warm-up run then measured run, fresh JVM each
         runs[cpus] = run_at(cpus, n_urls)
-        print(
-            f"local[{cpus}]: {runs[cpus]['urls_per_sec_by_strategy']}", flush=True
-        )
+        print(f"local[{cpus}]: {runs[cpus]['value']} urls/sec", flush=True)
     lo, hi = levels
-    ratio = hi / lo
-    result = {"n_urls": n_urls, "levels": list(levels)}
-    for strat in strategies:
-        thr_lo = runs[lo]["urls_per_sec_by_strategy"][strat]
-        thr_hi = runs[hi]["urls_per_sec_by_strategy"][strat]
-        result[strat] = {
-            f"urls_per_sec_local{lo}": thr_lo,
-            f"urls_per_sec_local{hi}": thr_hi,
-            "scaling_efficiency": round((thr_hi / thr_lo) / ratio, 3),
-        }
+    thr_lo, thr_hi = runs[lo]["value"], runs[hi]["value"]
+    result = {
+        "n_urls": n_urls,
+        "levels": list(levels),
+        f"urls_per_sec_local{lo}": thr_lo,
+        f"urls_per_sec_local{hi}": thr_hi,
+        "scaling_efficiency": round((thr_hi / thr_lo) / (hi / lo), 3),
+    }
     print(json.dumps(result))
 
     os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
@@ -86,20 +80,17 @@ def main():
             f.write(
                 "# BENCH/BASELINE — frontier-round scaling (N=8 vs 4N=32 cores)\n\n"
                 "Sandbox proxy for the north_rule two-cluster-size criterion: the\n"
-                "same frontier-round job (canonicalize -> xxhash64 -> bloom\n"
-                "seen-filter cogroup -> robots gate -> salted politeness pop) on\n"
+                "same engine round pair (canonicalize -> xxhash64 -> bucketed\n"
+                "seen store -> robots gate -> salted politeness pop) on\n"
                 "the same JVM-generated input at two parallelism levels.\n"
                 "Efficiency = (thr_32 / thr_8) / 4; target >= 0.8.\n\n"
                 "| when (UTC) | urls | urls/sec local[8] | urls/sec local[32] | efficiency |\n"
                 "|---|---|---|---|---|\n"
             )
-        for strat in strategies:
-            r = result[strat]
-            f.write(
-                f"| {stamp} ({strat}, {lo}->{hi}c) | {n_urls} "
-                f"| {r[f'urls_per_sec_local{lo}']} "
-                f"| {r[f'urls_per_sec_local{hi}']} | {r['scaling_efficiency']} |\n"
-            )
+        f.write(
+            f"| {stamp} (engine, {lo}->{hi}c) | {n_urls} | {thr_lo} | {thr_hi} "
+            f"| {result['scaling_efficiency']} |\n"
+        )
 
 
 if __name__ == "__main__":

@@ -1,6 +1,7 @@
-"""Per-stage CPU-vs-wall profile of one frontier round (eventLog-based).
+"""Per-stage CPU-vs-wall profile of bench.py's engine round pair
+(eventLog-based).
 
-Quantifies WHY exchange-heavy strategies under-scale 8 -> 32 cores in
+Quantifies WHY the engine round under-scales 8 -> 32 cores in
 LOCAL mode: if aggregate executor CPU time stays ~constant across
 parallelism levels while wall-clock does not drop 4x, the bottleneck is
 a shared resource (one memory bus / one shuffle disk in local mode),
@@ -8,7 +9,7 @@ not a serial fraction of the algorithm — on a real N -> 4N EXECUTOR
 scale-out each executor adds its own bus and disks, which is the regime
 the north_rule's >=0.8 criterion describes.
 
-Usage: BENCH_FRONTIER_URLS=4000000 python scripts/stage_profile.py [strategy]
+Usage: BENCH_FRONTIER_URLS=4000000 python scripts/stage_profile.py [--record]
 Appends a summary row to BENCH/BASELINE.md when --record is passed.
 """
 
@@ -40,18 +41,13 @@ spark = get_spark(
     },
 )
 spark.sparkContext.setLogLevel("ERROR")
-if os.environ["GC_STRATEGY"] == "engine":
-    dt, n, _splits = bench.engine_round(spark, warmup=True)
-else:
-    dt, n = bench.frontier_round(
-        spark, warmup=True, strategy=os.environ["GC_STRATEGY"]
-    )
+dt, n, _splits = bench.engine_round(spark, warmup=True)
 print(json.dumps({"wall_sec": dt, "urls": n}))
 spark.stop()
 """
 
 
-def run_level(cpus: int, strategy: str, n_urls: int) -> dict:
+def run_level(cpus: int, n_urls: int) -> dict:
     evdir = tempfile.mkdtemp(prefix=f"gc-ev{cpus}-")
     env = dict(
         os.environ,
@@ -61,7 +57,6 @@ def run_level(cpus: int, strategy: str, n_urls: int) -> dict:
         GC_REPO=REPO,
         GC_EVDIR=evdir,
         GC_WHDIR=tempfile.mkdtemp(prefix="gc-wh-"),
-        GC_STRATEGY=strategy,
     )
     cmd = [sys.executable, "-c", RUNNER]
     if os.path.exists("/usr/bin/taskset"):
@@ -111,17 +106,15 @@ def run_level(cpus: int, strategy: str, n_urls: int) -> dict:
 
 
 def main():
-    strategy = sys.argv[1] if len(sys.argv) > 1 else "bitword"
     n_urls = int(os.environ.get("BENCH_FRONTIER_URLS", 4_000_000))
     lo, hi = (
         int(x) for x in os.environ.get("BENCH_LEVELS", "8,32").split(",")
     )
-    rlo = run_level(lo, strategy, n_urls)
+    rlo = run_level(lo, n_urls)
     print(json.dumps(rlo), flush=True)
-    rhi = run_level(hi, strategy, n_urls)
+    rhi = run_level(hi, n_urls)
     print(json.dumps(rhi), flush=True)
     summary = {
-        "strategy": strategy,
         "n_urls": n_urls,
         "levels": [lo, hi],
         "wall_ratio_lo_over_hi": round(rlo["wall_sec"] / rhi["wall_sec"], 2),
@@ -135,7 +128,7 @@ def main():
     if "--record" in sys.argv:
         with open(os.path.join(REPO, "BENCH", "BASELINE.md"), "a") as f:
             f.write(
-                f"\nStage profile ({strategy}, {n_urls} urls): wall "
+                f"\nStage profile (engine, {n_urls} urls): wall "
                 f"{rlo['wall_sec']}s@{lo}c -> {rhi['wall_sec']}s@{hi}c "
                 f"(speedup {summary['wall_ratio_lo_over_hi']}x); total CPU work "
                 f"{rlo['cpu_core_sec']} -> {rhi['cpu_core_sec']} core-sec "

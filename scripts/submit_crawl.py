@@ -38,7 +38,6 @@ def main() -> None:
     ap.add_argument("--hosts", type=int, default=20)
     ap.add_argument("--pages-per-host", type=int, default=40)
     ap.add_argument("--rounds", type=int, default=4)
-    ap.add_argument("--mode", default="abucket")
     ap.add_argument("--base-dir", default=None)
     args = ap.parse_args()
 
@@ -60,7 +59,6 @@ def main() -> None:
         ),
         hostbudget=spark.createDataFrame(synth.gen_hostbudget(args.hosts)),
         base_dir=args.base_dir or tempfile.mkdtemp(prefix="geocrawl_submit_"),
-        mode=args.mode,
     )
     t0 = time.monotonic()
     log = eng.run(max_rounds=args.rounds)
@@ -69,7 +67,6 @@ def main() -> None:
     print(json.dumps({
         "metric": "submit_crawl",
         "master": spark.sparkContext.master,
-        "mode": args.mode,
         "rounds": len(log),
         "fetched": fetched,
         "wall_s": round(wall, 2),

@@ -106,8 +106,6 @@ def test_no_orphan_round_dirs_after_crawl(spark, tmp_path):
         ),
         hostbudget=spark.createDataFrame(synth.gen_hostbudget(4)),
         base_dir=str(tmp_path / "crawl"),
-        mode="abucket",
-        n_shards=2,
         n_buckets=2,
     )
     eng.run(max_rounds=12)

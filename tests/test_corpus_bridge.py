@@ -34,10 +34,8 @@ def crawl_sf(spark, tmp_path_factory):
         ),
         hostbudget=spark.createDataFrame(fx["budget"]),
         base_dir=str(tmp_path_factory.mktemp("bridge")),
-        n_shards=4,
         salt=4,
-        m_bits=1 << 18,
-        k=7,
+        n_buckets=4,
     )
     log = eng.run(max_rounds=50)
     sf = corpus_from_crawl(

@@ -43,7 +43,7 @@ def pyref_run(fixtures):
     return ref
 
 
-def _mk_engine(spark, fixtures, tmpdir, mode="exact"):
+def _mk_engine(spark, fixtures, tmpdir):
     return CrawlEngine(
         spark,
         pages=spark.createDataFrame(
@@ -53,11 +53,7 @@ def _mk_engine(spark, fixtures, tmpdir, mode="exact"):
         robots=spark.createDataFrame(fixtures["robots"], "host string, disallow array<string>, allow array<string>"),
         hostbudget=spark.createDataFrame(fixtures["budget"]),
         base_dir=str(tmpdir),
-        mode=mode,
-        n_shards=4,
         salt=4,
-        m_bits=1 << 18,
-        k=7,
         n_buckets=4,
     )
 
@@ -186,22 +182,6 @@ def test_dead_letters_identical(spark_run, pyref_run):
     assert len(got) > 0  # B4 dead-letter path exercised
 
 
-@pytest.mark.parametrize("mode", ["bloom", "cuckoo", "anti", "bitword", "abucket"])
-def test_seen_modes_match_exact(spark, fixtures, tmp_path_factory, pyref_run, mode):
-    """Same crawl under every alternative seen-filter strategy — identical
-    ordering, seen set, AND per-round counters.  bloom/bitword FPs would
-    be deterministic in both implementations (none at this m_bits)."""
-    eng = _mk_engine(spark, fixtures, tmp_path_factory.mktemp(f"crawl_{mode}"), mode=mode)
-    log = eng.run(max_rounds=50)
-    assert eng.crawl_order() == pyref_run.crawl_order
-    assert eng.seen_urls() == pyref_run.seen_urls()
-    want = {
-        c["round"]: {k: c[k] for k in COUNTER_KEYS} for c in pyref_run.counters_log
-    }
-    got = {e["round"]: {k: e[k] for k in COUNTER_KEYS} for e in log}
-    assert all(got[r] == want[r] for r in got) and len(got) > 3
-
-
 def test_round_cap_matches_pyref(spark, fixtures, tmp_path_factory, pyref_run):
     """E3 global per-round batch ceiling: engine == pyref under the same
     cap, the cap actually binds (more deferrals, more rounds), and the
@@ -222,7 +202,7 @@ def test_round_cap_matches_pyref(spark, fixtures, tmp_path_factory, pyref_run):
         robots=spark.createDataFrame(fixtures["robots"], "host string, disallow array<string>, allow array<string>"),
         hostbudget=spark.createDataFrame(fixtures["budget"]),
         base_dir=str(tmp_path_factory.mktemp("crawl_cap")),
-        n_shards=4, salt=4, m_bits=1 << 18, k=7, round_cap=cap,
+        salt=4, n_buckets=4, round_cap=cap,
     )
     eng.run(max_rounds=60)
     assert eng.crawl_order() == ref.crawl_order
@@ -246,31 +226,16 @@ def test_budget_carryover_changes_ordering(fixtures, pyref_run):
     assert ref_nocarry.seen_urls() == pyref_run.seen_urls()
 
 
-def test_kill_resume_identical(spark, fixtures, tmp_path_factory, spark_run, pyref_run):
-    """Kill after round 2, resume — identical final ordering (H4)."""
-    eng = _mk_engine(spark, fixtures, tmp_path_factory.mktemp("crawlr"))
-    eng.init_state()
-    eng.run_round(1)
-    eng.run_round(2)
-    # simulate a crash: some post-round-2 garbage exists but is uncommitted
-    eng.io.rollback_to(2)
-    # a brand-new engine resumes from the last committed snapshot
-    eng2 = _mk_engine(spark, fixtures, str(eng.io.base), )
-    eng2.run(max_rounds=50)
-    assert eng2.crawl_order() == pyref_run.crawl_order
-    assert eng2.seen_urls() == pyref_run.seen_urls()
-
-
-def test_kill_resume_identical_abucket(spark, fixtures, tmp_path_factory, pyref_run):
-    """Kill/resume under mode='abucket': round-3 appends to the seen store
-    happen BEFORE the manifest commit, so a crash between them must leave
-    the store readable as of round 2 — the round partition column + the
-    reader's ``round <= committed`` filter guarantee it without cleanup,
-    and the re-run's dynamic partition overwrite replaces the stale
-    partition idempotently."""
+def test_kill_resume_identical(spark, fixtures, tmp_path_factory, pyref_run):
+    """Kill after round 3, resume — identical final ordering (H4).  The
+    round-3 append to the seen store happens BEFORE the manifest commit,
+    so a crash between them must leave the store readable as of round 2
+    — the round partition column + the reader's ``round <= committed``
+    filter guarantee it without cleanup, and the re-run's dynamic
+    partition overwrite replaces the stale partition idempotently."""
     import os
 
-    eng = _mk_engine(spark, fixtures, tmp_path_factory.mktemp("crawlab"), mode="abucket")
+    eng = _mk_engine(spark, fixtures, tmp_path_factory.mktemp("crawlab"))
     persistent = spark.sparkContext._jsc.getPersistentRDDs
     eng.init_state()
     eng.run_round(1)
@@ -292,7 +257,7 @@ def test_kill_resume_identical_abucket(spark, fixtures, tmp_path_factory, pyref_
     assert os.path.exists(os.path.join(str(eng.io.base), "seen_store", "round=3"))
     # a brand-new engine resumes from the last committed snapshot and must
     # reproduce the oracle exactly despite the stale partition
-    eng2 = _mk_engine(spark, fixtures, str(eng.io.base), mode="abucket")
+    eng2 = _mk_engine(spark, fixtures, str(eng.io.base))
     eng2.run(max_rounds=50)
     assert eng2.crawl_order() == pyref_run.crawl_order
     assert eng2.seen_urls() == pyref_run.seen_urls()
@@ -331,7 +296,7 @@ def test_crawl_delay_caps_budget(spark, fixtures, tmp_path_factory, pyref_run):
         ),
         hostbudget=spark.createDataFrame(fixtures["budget"]),
         base_dir=str(tmp_path_factory.mktemp("crawl_delay")),
-        n_shards=4, salt=4, m_bits=1 << 18, k=7, n_buckets=4,
+        salt=4, n_buckets=4,
         round_seconds=60,
     )
     eng.run(max_rounds=80)
@@ -368,7 +333,7 @@ def test_host_rank_priority_golden(spark, fixtures, tmp_path_factory, pyref_run)
         ),
         hostbudget=spark.createDataFrame(fixtures["budget"]),
         base_dir=str(tmp_path_factory.mktemp("hostrank")),
-        n_shards=4, salt=4, m_bits=1 << 18, k=7, n_buckets=4,
+        salt=4, n_buckets=4,
         host_rank=spark.createDataFrame(
             [(h, r) for h, r in sorted(rank.items())], "host string, rank long"
         ),
@@ -439,7 +404,7 @@ def test_adaptive_budget_golden(spark, tmp_path_factory):
             ),
             hostbudget=spark.createDataFrame(budget),
             base_dir=str(tmpdir),
-            n_shards=4, salt=4, m_bits=1 << 18, k=7, n_buckets=4,
+            salt=4, n_buckets=4,
             adaptive_budget=True,
         )
 
@@ -550,7 +515,7 @@ def test_trap_guard_golden(spark, tmp_path_factory):
             ),
             hostbudget=spark.createDataFrame(budget),
             base_dir=str(tmpdir),
-            n_shards=4, salt=4, m_bits=1 << 18, k=7, n_buckets=4,
+            salt=4, n_buckets=4,
             trap_guard=True,
         )
 

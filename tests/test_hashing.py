@@ -2,7 +2,7 @@
 
 import pyspark.sql.functions as F
 
-from geocrawl_spark.hashing import shard_of, url_hash, url_hash2
+from geocrawl_spark.hashing import url_hash
 
 URLS = [
     "",
@@ -18,13 +18,6 @@ URLS = [
 
 def test_xxh64_matches_spark(spark):
     df = spark.createDataFrame([(u,) for u in URLS], "url string")
-    rows = df.select(
-        "url",
-        F.xxhash64("url").alias("h1"),
-        F.xxhash64(F.concat("url", F.lit("#h2"))).alias("h2"),
-        F.pmod(F.xxhash64("url"), F.lit(8)).alias("shard"),
-    ).collect()
+    rows = df.select("url", F.xxhash64("url").alias("h1")).collect()
     for r in rows:
         assert url_hash(r["url"]) == r["h1"]
-        assert url_hash2(r["url"]) == r["h2"]
-        assert shard_of(url_hash(r["url"]), 8) == r["shard"]

@@ -37,10 +37,8 @@ def runs(spark, tmp_path_factory):
         ),
         hostbudget=spark.createDataFrame(fx["budget"]),
         base_dir=str(tmp_path_factory.mktemp("links")),
-        n_shards=4,
         salt=4,
-        m_bits=1 << 18,
-        k=7,
+        n_buckets=4,
         log_links=True,
     )
     eng.run(max_rounds=50)

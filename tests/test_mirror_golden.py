@@ -100,8 +100,7 @@ def test_mirror_quarantine_golden(spark, fixtures, tmp_path):
         ),
         hostbudget=spark.createDataFrame(fixtures["budget"]),
         base_dir=str(tmp_path),
-        mode="exact",
-        n_shards=4,
+        n_buckets=4,
         mirror_guard=True,
     )
     eng_log = eng.run(max_rounds=30)

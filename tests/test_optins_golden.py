@@ -1,4 +1,4 @@
-"""Composed opt-ins golden: EVERY engine opt-in at once — abucket mode +
+"""Composed opt-ins golden: EVERY engine opt-in at once —
 compact_seen_every + log_links + adaptive_budget + host_rank — through a
 full crawl, a refresh (recrawl) commit, a kill/resume, and the post-
 refresh recrawl, asserted exactly equal to a pyref twin configured the
@@ -45,11 +45,7 @@ def _mk_engine(spark, fixtures, base_dir):
         ),
         hostbudget=spark.createDataFrame(fixtures["budget"]),
         base_dir=str(base_dir),
-        mode="abucket",
-        n_shards=4,
         salt=4,
-        m_bits=1 << 18,
-        k=7,
         n_buckets=4,
         compact_seen_every=2,
         log_links=True,

@@ -4,9 +4,8 @@ EXTRACTED-text length through the previous round — the tier-crawl
 feedback loop closed on the crawl's own content (host_quality_rollup's
 signal driving the scheduler), where host_rank closes it on the link
 graph.  Asserted exactly equal to the pyref twin: crawl ordering, seen
-set, per-round counters — alone in exact mode, and composed with every
-other opt-in (abucket + compaction + link log + adaptive budgets)
-through refresh and kill/resume, the interaction surface where the
+set, per-round counters — alone, and composed with every other opt-in
+(compaction + link log + adaptive budgets) through refresh and kill/resume, the interaction surface where the
 hosterr-carry bug lived (ADVICE r4 high).
 """
 
@@ -53,13 +52,13 @@ def _mk_engine(spark, fixtures, base_dir, **kw):
     )
 
 
-def test_quality_rank_exact_mode_matches_pyref(spark, fixtures, tmp_path):
+def test_quality_rank_matches_pyref(spark, fixtures, tmp_path):
     ref = PyRefCrawl(
         fixtures["pages"], fixtures["seeds"], fixtures["robots"],
         fixtures["budget"], quality_rank=True,
     )
     ref.run(max_rounds=50)
-    eng = _mk_engine(spark, fixtures, tmp_path, mode="exact", n_shards=4, salt=4)
+    eng = _mk_engine(spark, fixtures, tmp_path, salt=4, n_buckets=4)
     log = eng.run(max_rounds=50)
     assert eng.crawl_order() == ref.crawl_order
     assert eng.seen_urls() == ref.seen_urls()
@@ -103,7 +102,7 @@ def test_quality_rank_mutually_exclusive_with_host_rank(spark, fixtures, tmp_pat
 def test_quality_rank_composed_optins_refresh_resume(
     spark, fixtures, tmp_path_factory
 ):
-    """quality_rank + abucket + compaction + link log + adaptive budgets
+    """quality_rank + compaction + link log + adaptive budgets
     + trap guard + mirror guard + sitemap discovery through crawl ->
     refresh -> kill/resume -> post-refresh recrawl (every per-round feedback table — hosterr,
     hostqual, hosttrap, hostdup — must survive the refresh commit and
@@ -111,7 +110,7 @@ def test_quality_rank_composed_optins_refresh_resume(
     they count as dups on BOTH sides — the mirror stats double as a
     change-rate signal)."""
     kw = dict(
-        mode="abucket", n_shards=4, salt=4, m_bits=1 << 18, k=7, n_buckets=4,
+        salt=4, n_buckets=4,
         compact_seen_every=2, log_links=True, adaptive_budget=True,
         trap_guard=True, mirror_guard=True, use_sitemaps=True,
     )

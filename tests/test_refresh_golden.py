@@ -3,8 +3,7 @@ crawl, re-queue a deterministic url selection on BOTH the engine and the
 pyref oracle, run the refresh rounds, and assert exact equality of the
 continued ordering, per-round counters, host lineage, and the (unchanged)
 seen set.  Also covers: the no-op contract (unknown/pending urls commit
-nothing) and the abucket production mode (refresh needs no seen-store
-write at all).
+nothing); refresh needs no seen-store write at all.
 """
 
 import pytest
@@ -26,7 +25,7 @@ def fixtures():
     }
 
 
-def _mk_engine(spark, fixtures, tmpdir, mode):
+def _mk_engine(spark, fixtures, tmpdir):
     return CrawlEngine(
         spark,
         pages=spark.createDataFrame(
@@ -39,11 +38,7 @@ def _mk_engine(spark, fixtures, tmpdir, mode):
         ),
         hostbudget=spark.createDataFrame(fixtures["budget"]),
         base_dir=str(tmpdir),
-        mode=mode,
-        n_shards=4,
         salt=4,
-        m_bits=1 << 18,
-        k=7,
         n_buckets=4,
     )
 
@@ -68,12 +63,12 @@ def _frontier_order(ref):
     )
 
 
-def _run_pair(spark, fixtures, tmpdir, mode):
+def _run_pair(spark, fixtures, tmpdir):
     ref = PyRefCrawl(
         fixtures["pages"], fixtures["seeds"], fixtures["robots"], fixtures["budget"]
     )
     ref.run(max_rounds=50)
-    eng = _mk_engine(spark, fixtures, tmpdir, mode)
+    eng = _mk_engine(spark, fixtures, tmpdir)
     eng.run(max_rounds=50)
     assert eng.crawl_order() == ref.crawl_order  # pre-refresh baseline
 
@@ -94,9 +89,9 @@ def _run_pair(spark, fixtures, tmpdir, mode):
     return ref, eng, eng_log, ref_log
 
 
-def test_refresh_golden_exact(spark, fixtures, tmp_path_factory):
+def test_refresh_golden(spark, fixtures, tmp_path_factory):
     ref, eng, eng_log, ref_log = _run_pair(
-        spark, fixtures, tmp_path_factory.mktemp("refresh_exact"), "exact"
+        spark, fixtures, tmp_path_factory.mktemp("refresh")
     )
     # the refresh actually took multiple rounds (politeness budgets bind)
     assert len(eng_log) >= 2
@@ -123,19 +118,8 @@ def test_refresh_golden_exact(spark, fixtures, tmp_path_factory):
     assert 0 < len(got_stale) < len(ref.crawl_order)
 
 
-def test_refresh_golden_abucket(spark, fixtures, tmp_path_factory):
-    ref, eng, eng_log, ref_log = _run_pair(
-        spark, fixtures, tmp_path_factory.mktemp("refresh_abucket"), "abucket"
-    )
-    got = [{"round": e["round"], **{k: e[k] for k in COUNTER_KEYS}} for e in eng_log]
-    want = [{"round": e["round"], **{k: e[k] for k in COUNTER_KEYS}} for e in ref_log]
-    assert got == want
-    assert eng.crawl_order() == _frontier_order(ref)
-    assert eng.seen_urls() == ref.seen_urls()
-
-
 def test_refresh_noop_commits_nothing(spark, fixtures, tmp_path_factory):
-    eng = _mk_engine(spark, fixtures, tmp_path_factory.mktemp("refresh_noop"), "exact")
+    eng = _mk_engine(spark, fixtures, tmp_path_factory.mktemp("refresh_noop"))
     eng.run(max_rounds=50)
     before = eng.io.latest_round()
     # unknown url and a still-pending-impossible case: nothing matches
@@ -146,8 +130,7 @@ def test_refresh_noop_commits_nothing(spark, fixtures, tmp_path_factory):
     assert eng.io.latest_round() == before  # no round committed
 
 
-@pytest.mark.parametrize("mode", ["exact", "abucket"])
-def test_refresh_observes_changed_content(spark, fixtures, tmp_path_factory, mode):
+def test_refresh_observes_changed_content(spark, fixtures, tmp_path_factory):
     """The complete freshness loop (VERDICT r4 missing #1): crawl corpus
     v1 to drain, swap in a v2 snapshot via set_pages() where a handful of
     fetched pages' html changed, refresh() those urls, run — the
@@ -164,8 +147,8 @@ def test_refresh_observes_changed_content(spark, fixtures, tmp_path_factory, mod
         fixtures["pages"], fixtures["seeds"], fixtures["robots"], fixtures["budget"]
     )
     ref.run(max_rounds=50)
-    d = tmp_path_factory.mktemp(f"refresh_content_{mode}")
-    eng = _mk_engine(spark, fixtures, d, mode)
+    d = tmp_path_factory.mktemp("refresh_content")
+    eng = _mk_engine(spark, fixtures, d)
     eng.run(max_rounds=50)
     assert eng.crawl_order() == ref.crawl_order
 
@@ -268,7 +251,7 @@ def test_refresh_resume_new_engine(spark, fixtures, tmp_path_factory):
     )
     ref.run(max_rounds=50)
     d = tmp_path_factory.mktemp("refresh_resume")
-    eng = _mk_engine(spark, fixtures, d, "exact")
+    eng = _mk_engine(spark, fixtures, d)
     eng.run(max_rounds=50)
     sel = _refresh_selection(ref)
     n_ref = ref.refresh(sel)
@@ -276,7 +259,7 @@ def test_refresh_resume_new_engine(spark, fixtures, tmp_path_factory):
     assert n_eng == n_ref > 0
     r_commit = eng.io.latest_round()
     # "kill": abandon the first engine; a new one resumes from disk
-    eng2 = _mk_engine(spark, fixtures, d, "exact")
+    eng2 = _mk_engine(spark, fixtures, d)
     eng2.run(max_rounds=30)
     r = r_commit + 1
     while ref.run_round(r) is not None:
@@ -316,11 +299,8 @@ def test_refresh_mirror_distinguishes_changed_content(
         ),
         hostbudget=spark.createDataFrame(fixtures["budget"]),
         base_dir=str(d),
-        mode="exact",
-        n_shards=4,
         salt=4,
-        m_bits=1 << 18,
-        k=7,
+        n_buckets=4,
         mirror_guard=True,
     )
     eng.run(max_rounds=50)

@@ -151,7 +151,7 @@ def _crawl(spark, fx, robots_df, tmpdir):
         robots=robots_df,
         hostbudget=spark.createDataFrame(fx["budget"]),
         base_dir=str(tmpdir),
-        mode="exact", n_shards=4, salt=4, m_bits=1 << 18, k=7,
+        salt=4, n_buckets=4,
     )
     eng.run(max_rounds=50)
     return eng

@@ -1,186 +1,87 @@
-"""Sharded seen-filter: Spark cogroup pass vs PySeenFilter twin; bloom
-no-false-negative and FPR-bound properties."""
+"""The bucketed seen store: admission fresh sets and stats against a
+plain-set oracle, round-partition semantics, the executed admission plan,
+compaction, and compaction inside a full engine crawl."""
+
+import os
 
 import pandas as pd
+import pyspark.sql.functions as F
 import pytest
 
-from geocrawl_spark.seen import PySeenFilter, filter_and_update, init_shards
+from geocrawl_spark.seen import (
+    _store_partitions,
+    compact_seen_store,
+    ensure_seen_store,
+    filter_and_update_abucket_flagged,
+)
 
 
 def _urls(n, prefix="http://h.org/p/"):
     return [f"{prefix}{i}.html" for i in range(n)]
 
 
-@pytest.mark.parametrize("mode", ["exact", "bloom", "cuckoo"])
-def test_spark_matches_python(spark, mode):
-    n_shards, m_bits, k = 4, 1 << 16, 7
-    first = _urls(200)
-    second = _urls(300)  # overlaps first 200
+class _SetOracle:
+    """The seen set as a plain Python set: a batch's fresh urls are the
+    distinct ones not seen before the batch."""
 
-    py = PySeenFilter(mode, n_shards, m_bits, k)
-    py_fresh1 = py.add_all(first)
-    py_fresh2 = py.add_all(second)
+    def __init__(self):
+        self.seen: set[str] = set()
 
-    shards = init_shards(spark, mode, n_shards, m_bits, k)
-    cand1 = spark.createDataFrame(
-        pd.DataFrame({"url": first, "depth": [1] * len(first)}),
-        "url string, depth long",
-    )
-    fresh1, shards1, _ = filter_and_update(cand1, shards, mode, n_shards, m_bits, k)
-    got1 = sorted(r["url"] for r in fresh1.collect())
-    assert got1 == sorted(py_fresh1)
-
-    # materialize shard state (as the engine does between passes)
-    shards1 = spark.createDataFrame(shards1.toPandas())
-    cand2 = spark.createDataFrame(
-        pd.DataFrame({"url": second, "depth": [2] * len(second)}),
-        "url string, depth long",
-    )
-    fresh2, shards2, _ = filter_and_update(cand2, shards1, mode, n_shards, m_bits, k)
-    got2 = sorted(r["url"] for r in fresh2.collect())
-    assert got2 == sorted(py_fresh2)
-    # only the 100 genuinely-new urls survive (bloom FPs would show here,
-    # deterministically, in both implementations)
-    assert set(got2) <= set(second) - set(first)
-
-    n_items = {r["shard_id"]: r["n_items"] for r in shards2.collect()}
-    assert sum(n_items.values()) == sum(py.n_items)
+    def add_batch(self, urls):
+        fresh = sorted(set(urls) - self.seen)
+        self.seen.update(fresh)
+        return fresh
 
 
-def test_anti_join_strategy_matches(spark):
-    """The JVM-only anti-join strategy returns the same fresh set as the
-    cogroup strategies (it is exact by construction)."""
-    import pyspark.sql.functions as F
-
-    from geocrawl_spark.seen import filter_and_update_anti
-
-    first, second = _urls(200), _urls(300)
-    py = PySeenFilter("exact", 4, 1 << 16, 7)
-    f1 = py.add_all(first)
-    f2 = py.add_all(second)
-
-    empty = spark.range(0).select(F.xxhash64(F.col("id").cast("string")).alias("h1"))
-    c1 = spark.createDataFrame(
-        pd.DataFrame({"url": first, "depth": [1] * len(first)}),
-        "url string, depth long",
-    )
-    fresh1, seen1, stats1, _p1 = filter_and_update_anti(c1, empty)
-    assert sorted(r["url"] for r in fresh1.collect()) == sorted(f1)
-    seen1 = spark.createDataFrame(seen1.toPandas())
-    c2 = spark.createDataFrame(
-        pd.DataFrame({"url": second, "depth": [2] * len(second)}),
-        "url string, depth long",
-    )
-    fresh2, seen2, stats2, _p2 = filter_and_update_anti(c2, seen1)
-    assert sorted(r["url"] for r in fresh2.collect()) == sorted(f2)
-    s = {r["kind"]: (r["n_cand"], r["n_fresh"]) for r in stats2.collect()}
-    assert s == {"page": (300, 100)}
-
-
-def test_anti_bucketed_matches_and_never_shuffles_seen_side(spark):
-    """The bucketed anti-join (the 10^10 storage form): same fresh set as
-    the in-memory anti strategy, and the physical plan shuffles ONLY the
-    candidate batch — the seen table is a bucketed FileScan with no
-    Exchange above it, and the append grows the table in place."""
-    import pyspark.sql.functions as F
-
-    from geocrawl_spark.seen import (
-        create_bucketed_seen_table,
-        filter_and_update_anti_bucketed,
+def _cand(spark, urls, depths):
+    if isinstance(depths, int):
+        depths = [depths] * len(urls)
+    return spark.createDataFrame(
+        pd.DataFrame({"url": urls, "depth": depths}), "url string, depth long"
     )
 
-    first, second = _urls(300), _urls(500)
-    py = PySeenFilter("exact", 4, 1 << 16, 7)
-    f1 = py.add_all(first)
-    f2 = py.add_all(second)
 
-    create_bucketed_seen_table(spark, "t_seen_bkt", n_buckets=8)
-    c1 = spark.createDataFrame(
-        pd.DataFrame({"url": first, "depth": [1] * len(first)}),
-        "url string, depth long",
+def _admit(spark, table, cand, n_buckets, upto_round, round_no):
+    """One engine-shaped admission round: flag, read fresh rows and stats
+    from the one persisted pass, unpersist, then append the fresh urls
+    from driver-side values (the engine appends from its written
+    ``admitted`` table, never from the cache).  Returns
+    ({url: depth} of fresh rows, {kind: (n_cand, n_fresh)})."""
+    flagged, stats, append = filter_and_update_abucket_flagged(
+        cand, spark, table, n_buckets, upto_round=upto_round, round_no=round_no
     )
-    fresh1, append1 = filter_and_update_anti_bucketed(c1, spark, "t_seen_bkt", 8)
-    assert sorted(r["url"] for r in fresh1.collect()) == sorted(f1)
-    append1()
-    fresh1.unpersist()
-
-    c2 = spark.createDataFrame(
-        pd.DataFrame({"url": second, "depth": [2] * len(second)}),
-        "url string, depth long",
-    )
-    fresh2, append2 = filter_and_update_anti_bucketed(c2, spark, "t_seen_bkt", 8)
-    assert sorted(r["url"] for r in fresh2.collect()) == sorted(f2)
-    append2()
-    assert spark.table("t_seen_bkt").count() == 500
-
-    # plan shape: exactly one Exchange (candidates), bucketed seen scan.
-    # At production size Catalyst picks SMJ on its own (the seen table is
-    # far beyond any broadcast threshold); force it here so the assert
-    # reflects that regime instead of the tiny-table broadcast choice.
-    w = (
-        c2.withColumn("h1", F.xxhash64("url"))
-        .repartition(8, "h1")
-        .groupBy("h1")
-        .agg(F.min("url").alias("url"))
-    )
-    plan = (
-        w.join(spark.table("t_seen_bkt").hint("merge"), "h1", "left_anti")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert plan.count("Exchange") == 1  # candidates only
-    assert "Bucketed: true" in plan  # seen side read bucket-local
-    fresh2.unpersist()
-    spark.sql("drop table t_seen_bkt")
+    fresh = {
+        r["url"]: r["depth"]
+        for r in flagged.filter(F.col("_seen").isNull()).collect()
+    }
+    st = {r["kind"]: (r["n_cand"], r["n_fresh"]) for r in stats.collect()}
+    flagged.unpersist()
+    append(spark.createDataFrame([(u,) for u in sorted(fresh)], "url string"))
+    return fresh, st
 
 
 def test_abucket_engine_store_round_semantics(spark, tmp_path):
-    """filter_and_update_abucket (the CrawlEngine mode='abucket' form):
-    correct fresh sets across rounds, O(fresh) appends into per-round
-    partitions, stats parity, uncommitted-round invisibility (reads filter
-    round <= upto), and idempotent re-run via dynamic partition overwrite."""
-    import os
-
-    import pyspark.sql.functions as F
-
-    from geocrawl_spark.seen import ensure_seen_store, filter_and_update_abucket
-
+    """filter_and_update_abucket_flagged across rounds: fresh sets equal
+    the set oracle, stats count candidates and fresh rows, each round's
+    append lands in its own partition, rows of a later round are
+    invisible to an earlier reader (round <= upto), and a re-run of a
+    round replaces its partition (dynamic overwrite) instead of
+    duplicating hashes."""
     base = str(tmp_path / "crawl")
     table = ensure_seen_store(spark, base, n_buckets=4, fresh=True)
 
     first, second = _urls(300), _urls(500)
-    py = PySeenFilter("exact", 4, 1 << 16, 7)
-    f1 = py.add_all(first)
-    f2 = py.add_all(second)
+    oracle = _SetOracle()
+    f1, f2 = oracle.add_batch(first), oracle.add_batch(second)
 
-    c1 = spark.createDataFrame(
-        pd.DataFrame({"url": first, "depth": [1] * len(first)}),
-        "url string, depth long",
-    )
-    fresh1, stats1, parents1, append1 = filter_and_update_abucket(
-        c1, spark, table, 4, upto_round=-1, round_no=0
-    )
-    assert sorted(r["url"] for r in fresh1.collect()) == sorted(f1)
-    append1()
-    s = {r["kind"]: (r["n_cand"], r["n_fresh"]) for r in stats1.collect()}
-    assert s == {"page": (300, 300)}
-    for p in parents1:
-        p.unpersist()
+    fresh1, s1 = _admit(spark, table, _cand(spark, first, 1), 4, -1, 0)
+    assert sorted(fresh1) == f1
+    assert s1 == {"page": (300, 300)}
 
-    c2 = spark.createDataFrame(
-        pd.DataFrame({"url": second, "depth": [2] * len(second)}),
-        "url string, depth long",
-    )
-    fresh2, stats2, parents2, append2 = filter_and_update_abucket(
-        c2, spark, table, 4, upto_round=0, round_no=1
-    )
-    assert sorted(r["url"] for r in fresh2.collect()) == sorted(f2)
-    append2()
-    s = {r["kind"]: (r["n_cand"], r["n_fresh"]) for r in stats2.collect()}
-    assert s == {"page": (500, 200)}
-    for p in parents2:
-        p.unpersist()
+    c2 = _cand(spark, second, 2)
+    fresh2, s2 = _admit(spark, table, c2, 4, 0, 1)
+    assert sorted(fresh2) == f2
+    assert s2 == {"page": (500, 200)}
 
     # per-round partitions on disk; round-1 rows invisible to an
     # upto_round=0 reader (this is what makes crashed rounds harmless)
@@ -191,59 +92,48 @@ def test_abucket_engine_store_round_semantics(spark, tmp_path):
 
     # idempotent re-run of round 1 (rollback + replay): dynamic overwrite
     # replaces the partition, no duplicate hashes
-    fresh2b, _, parents2b, append2b = filter_and_update_abucket(
-        c2, spark, table, 4, upto_round=0, round_no=1
-    )
-    assert sorted(r["url"] for r in fresh2b.collect()) == sorted(f2)
-    append2b()
+    fresh2b, s2b = _admit(spark, table, c2, 4, 0, 1)
+    assert sorted(fresh2b) == f2 and s2b == s2
     assert spark.table(table).count() == 500
-    for p in parents2b:
-        p.unpersist()
+    spark.sql(f"drop table {table}")
 
-    # plan shape: seen side is a bucketed scan with the round partition
-    # filter and NO Exchange above it; only the candidate batch shuffles
-    plan = (
-        spark.createDataFrame(
-            pd.DataFrame({"url": second, "depth": [2] * len(second)}),
-            "url string, depth long",
+
+def test_admission_plan_shuffles_only_candidates(spark, tmp_path):
+    """The executed plan of the admission pass itself: exactly one
+    Exchange (the candidate batch into the bucket layout), a bucketed
+    seen-store scan and the round partition filter.  At production size
+    the store is far beyond any broadcast threshold; broadcast is turned
+    off here so the small test store plans the same way."""
+    base = str(tmp_path / "plan")
+    table = ensure_seen_store(spark, base, n_buckets=4, fresh=True)
+    _admit(spark, table, _cand(spark, _urls(300), 1), 4, -1, 0)
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        flagged, _, _ = filter_and_update_abucket_flagged(
+            _cand(spark, _urls(500), 2), spark, table, 4, upto_round=0, round_no=1
         )
-        .withColumn("h1", F.xxhash64("url"))
-        .repartition(4, "h1")
-        .groupBy("h1")
-        .agg(F.min("url").alias("url"))
-        .join(
-            spark.table(table).where("round <= 1").select("h1").hint("merge"),
-            "h1",
-            "left_anti",
-        )
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert plan.count("Exchange") == 1  # candidates only
-    assert "Bucketed: true" in plan
-    assert "round" in plan.split("PartitionFilters", 1)[1][:200]
+        plan = flagged._jdf.queryExecution().executedPlan().toString()
+        flagged.unpersist()
+    finally:
+        spark.conf.set(key, prev)
+    assert plan.count("Exchange") == 1, plan  # candidates only
+    assert "Bucketed: true" in plan, plan  # seen side read bucket-local
+    filters = plan.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
+    assert "round" in filters and "<= 0" in filters, filters
     spark.sql(f"drop table {table}")
 
 
 def test_compaction_bounds_files_and_preserves_membership(spark, tmp_path):
     """compact_seen_store: after many rounds with periodic compaction the
     store's file count stays bounded (vs linear growth in rounds), the
-    membership set is IDENTICAL to an uncompacted twin store at every
-    step, the base partition id is negative (always visible to round <=
-    upto readers) and strictly decreasing across compactions, and the
-    manifest guard refuses rollback past the compaction point."""
-    import os
-
-    import pyspark.sql.functions as F
-
+    fresh sets equal an uncompacted twin store's and the set oracle's at
+    every step, the base partition id is negative (always visible to
+    round <= upto readers) and strictly decreasing across compactions,
+    and the manifest guard refuses rollback past the compaction point."""
     from geocrawl_spark.checkpoint import TableIO
-    from geocrawl_spark.seen import (
-        _store_partitions,
-        compact_seen_store,
-        ensure_seen_store,
-        filter_and_update_abucket,
-    )
 
     n_buckets, every = 4, 4
     base_c = str(tmp_path / "compacted")
@@ -251,6 +141,7 @@ def test_compaction_bounds_files_and_preserves_membership(spark, tmp_path):
     io = TableIO(base_c)
     t_c = ensure_seen_store(spark, base_c, n_buckets, fresh=True)
     t_u = ensure_seen_store(spark, base_u, n_buckets, fresh=True)
+    oracle = _SetOracle()
 
     def round_urls(r):
         # half repeats of the previous round, half fresh
@@ -258,20 +149,11 @@ def test_compaction_bounds_files_and_preserves_membership(spark, tmp_path):
 
     n_rounds = 12
     for r in range(n_rounds):
-        cand = spark.createDataFrame(
-            pd.DataFrame({"url": round_urls(r), "depth": [r] * 300}),
-            "url string, depth long",
-        )
-        got = {}
-        for tbl, bdir in ((t_c, base_c), (t_u, base_u)):
-            fresh, _stats, parents, append = filter_and_update_abucket(
-                cand, spark, tbl, n_buckets, upto_round=r - 1, round_no=r
-            )
-            got[tbl] = sorted(x["url"] for x in fresh.collect())
-            append()
-            for p in parents:
-                p.unpersist()
-        assert got[t_c] == got[t_u], f"membership diverged at round {r}"
+        cand = _cand(spark, round_urls(r), r)
+        want = oracle.add_batch(round_urls(r))
+        for tbl in (t_c, t_u):
+            fresh, _ = _admit(spark, tbl, cand, n_buckets, r - 1, r)
+            assert sorted(fresh) == want, f"membership diverged at round {r}"
         if r > 0 and r % every == 0:
             res = compact_seen_store(spark, base_c, n_buckets, r, io=io)
             assert res is not None and res["base"] < 0
@@ -319,7 +201,6 @@ def test_engine_crawl_with_compaction_identical(spark, tmp_path):
     bounds the store's file count."""
     from geocrawl_spark import synth
     from geocrawl_spark.frontier import CrawlEngine
-    from geocrawl_spark.seen import _store_partitions
 
     def build(base, **kw):
         return CrawlEngine(
@@ -335,7 +216,6 @@ def test_engine_crawl_with_compaction_identical(spark, tmp_path):
             ),
             hostbudget=spark.createDataFrame(synth.gen_hostbudget(4)),
             base_dir=base,
-            mode="abucket",
             n_buckets=2,
             **kw,
         )
@@ -355,185 +235,33 @@ def test_engine_crawl_with_compaction_identical(spark, tmp_path):
     assert e2.io.get_meta("seen_compaction")["base"] < 0
 
 
-def test_bitmap_strategy_matches_blob(spark):
-    """JVM bitmap bloom == blob bloom bit-for-bit: tiny m_bits forces
-    real false positives, which must agree exactly (same Kirsch-
-    Mitzenmacher positions) with the PySeenFilter blob twin."""
-    import pyspark.sql.functions as F
-
-    from geocrawl_spark.seen import filter_and_update_bitmap, init_bitmap
-
-    m_bits, k = 1 << 12, 7  # 4096 bits, 2000+ urls -> plenty of FPs
-    first, second = _urls(1200), _urls(2000)
-
-    py = PySeenFilter("bloom", n_shards=1, m_bits=m_bits, k=k)
-    f1 = py.add_batch(first)
-    f2 = py.add_batch(second)
-    # batch-2 novel urls (800) collide with batch-1 bits -> real FPs
-    assert len(f2) < len(set(second) - set(first))
-
-    c1 = spark.createDataFrame(
-        pd.DataFrame({"url": first, "depth": [1] * len(first)}),
-        "url string, depth long",
-    )
-    fresh1, bm1, stats1, out1 = filter_and_update_bitmap(
-        c1, init_bitmap(spark), m_bits, k
-    )
-    assert sorted(r["url"] for r in fresh1.collect()) == f1
-    bm1 = spark.createDataFrame(bm1.toPandas(), "word_id long, bits long")
-    out1.unpersist()
-
-    c2 = spark.createDataFrame(
-        pd.DataFrame({"url": second, "depth": [2] * len(second)}),
-        "url string, depth long",
-    )
-    fresh2, bm2, stats2, out2 = filter_and_update_bitmap(c2, bm1, m_bits, k)
-    assert sorted(r["url"] for r in fresh2.collect()) == f2
-    s = {r["kind"]: (r["n_cand"], r["n_fresh"]) for r in stats2.collect()}
-    assert s == {"page": (2000, len(f2))}
-    out2.unpersist()
+def test_within_batch_dedup(spark, tmp_path):
+    table = ensure_seen_store(spark, str(tmp_path / "dedup"), 2, fresh=True)
+    cand = _cand(spark, ["u1", "u1", "u2"], [5, 2, 1])
+    fresh, st = _admit(spark, table, cand, 2, -1, 0)
+    assert fresh == {"u1": 2, "u2": 1}  # min depth wins
+    assert st == {"page": (2, 2)}  # candidates counted after the dedup
+    spark.sql(f"drop table {table}")
 
 
-def test_bitmap_strategy_plan_is_jvm_only(spark):
-    """The bitmap membership plan contains no Python/Arrow operator."""
-    import pyspark.sql.functions as F
-
-    from geocrawl_spark.seen import filter_and_update_bitmap, init_bitmap
-
-    c = spark.createDataFrame(
-        pd.DataFrame({"url": _urls(10), "depth": [1] * 10}),
-        "url string, depth long",
-    )
-    fresh, bm, stats, out = filter_and_update_bitmap(c, init_bitmap(spark))
-    plan = fresh._jdf.queryExecution().executedPlan().toString()
-    for marker in ("ArrowEvalPython", "BatchEvalPython", "FlatMapGroupsInPandas"):
-        assert marker not in plan
-    out.unpersist()
-
-
-def test_bitmap_within_batch_dedup(spark):
-    from geocrawl_spark.seen import filter_and_update_bitmap, init_bitmap
-
-    cand = spark.createDataFrame(
-        pd.DataFrame({"url": ["u1", "u1", "u2"], "depth": [5, 2, 1]}),
-        "url string, depth long",
-    )
-    fresh, _, _, out = filter_and_update_bitmap(cand, init_bitmap(spark))
-    got = {r["url"]: r["depth"] for r in fresh.collect()}
-    assert got == {"u1": 2, "u2": 1}
-    out.unpersist()
-
-
-def test_within_batch_dedup(spark):
-    shards = init_shards(spark, "exact", 2, 1 << 10, 3)
-    cand = spark.createDataFrame(
-        pd.DataFrame({"url": ["u1", "u1", "u2"], "depth": [5, 2, 1]}),
-        "url string, depth long",
-    )
-    fresh, _, _ = filter_and_update(cand, shards, "exact", 2, 1 << 10, 3)
-    got = {r["url"]: r["depth"] for r in fresh.collect()}
-    assert got == {"u1": 2, "u2": 1}  # min depth wins
-
-
-def test_bloom_no_false_negatives_and_fpr():
-    py = PySeenFilter("bloom", n_shards=2, m_bits=1 << 18, k=7)
-    inserted = _urls(5000)
-    py.add_all(inserted)
-    assert all(py.contains(u) for u in inserted)  # no false negatives
-    probe = _urls(5000, prefix="http://other.org/q/")
-    fp = sum(py.contains(u) for u in probe)
-    assert fp / len(probe) < 0.01  # sized for ~2.6 bits... generous bound
-
-
-def test_exact_delete_duplicate_keys_in_batch():
-    """ADVICE r4: a delete batch holding the SAME key twice must flag
-    exactly the elements actually removed — set semantics.  Before the
-    fix, np.delete with a repeated index removed one array element while
-    the mask claimed N removals, so an n_items counter driven by
-    removed.sum() drifted."""
-    import numpy as np
-
-    from geocrawl_spark.seen import _insert, delete_from_blob, empty_blob
-
-    keys = np.array([10, 20, 30], dtype=np.uint64)
-    blob = _insert(empty_blob("exact", 0, 0), keys, keys)
-    batch = np.array([20, 20, 99, 10, 10, 10], dtype=np.uint64)
-    blob2, removed = delete_from_blob(blob, batch)
-    # one removal per PRESENT distinct key; absent key never flagged
-    assert removed.sum() == 2
-    assert removed.tolist() == [True, False, False, True, False, False]
-    data = np.frombuffer(blob2[4:], dtype=np.uint64)
-    assert data.tolist() == [30]
-    # idempotent: deleting the same batch again removes nothing
-    blob3, removed2 = delete_from_blob(blob2, batch)
-    assert removed2.sum() == 0 and blob3 == blob2
-
-
-def test_cuckoo_no_false_negatives_and_fpr():
-    """Cuckoo codec at HIGH load (~76%): every inserted key answers seen
-    (no false negatives even after displacement chains), and the FPR on
-    unseen keys stays near the 2*slots/2^16 design bound."""
-    # 2 shards x (1<<18 bits -> 1024 buckets x 4 slots) = 8192 capacity
-    py = PySeenFilter("cuckoo", n_shards=2, m_bits=1 << 18, k=7)
-    inserted = _urls(6200)
-    assert sorted(py.add_batch(inserted)) == sorted(inserted)
-    assert all(py.contains(u) for u in inserted)  # no false negatives
-    probe = _urls(50000, prefix="http://other.org/q/")
-    fp = sum(py.contains(u) for u in probe)
-    # design FPR ~ 2*4/65536 * load ~= 0.009%; allow generous slack
-    assert fp / len(probe) < 0.002
-
-
-def test_cuckoo_delete_then_readmit():
-    """The cuckoo differentiator vs bloom: a politeness retraction deletes
-    the fingerprint, after which the url is admittable again — and bloom
-    refuses the same operation loudly."""
-    import pytest as _pytest
-
-    py = PySeenFilter("cuckoo", n_shards=2, m_bits=1 << 14, k=7)
-    urls = _urls(300)
-    py.add_batch(urls)
-    assert py.discard(urls[7])
-    assert not py.contains(urls[7])
-    assert not py.discard(urls[7])  # second delete finds nothing
-    assert py.add(urls[7])  # re-admittable
-    assert py.contains(urls[7])
-    # untouched keys unaffected by the back-swap repacking
-    assert all(py.contains(u) for u in urls)
-
-    bl = PySeenFilter("bloom", n_shards=1, m_bits=1 << 12, k=3)
-    bl.add("http://x.org/")
-    with _pytest.raises(ValueError, match="bloom"):
-        bl.discard("http://x.org/")
-
-
-def test_cuckoo_insert_order_invariant():
-    """Blob layout is a pure function of (prior state, batch SET): the
-    Spark cogroup and the pyref twin may present the same fresh batch in
-    different orders, so _insert must sort internally."""
-    import numpy as np
-
-    from geocrawl_spark.seen import _insert, empty_blob
-
-    blob = empty_blob("cuckoo", 1 << 14, 7)
-    h = np.random.default_rng(3).integers(1, 2**63, 500, dtype=np.int64).view(np.uint64)
-    assert _insert(blob, h, h) == _insert(blob, h[::-1].copy(), h[::-1].copy())
-
-
-def test_cuckoo_overflow_raises():
-    """Over-capacity insert must fail loudly (sizing bug), never silently
-    drop a key — a dropped key would be a FALSE NEGATIVE, re-crawling the
-    same url forever."""
-    import pytest as _pytest
-
-    tiny = PySeenFilter("cuckoo", n_shards=1, m_bits=16 * 4 * 4, k=7)  # 16 slots
-    with _pytest.raises(RuntimeError, match="capacity"):
-        tiny.add_batch(_urls(64))
-
-
-def test_monotone_property():
-    """Once seen, always seen (H2 monotonicity)."""
-    py = PySeenFilter("exact", 4, 1 << 10, 3)
+def test_seen_store_monotone(spark, tmp_path):
+    """Once seen, always seen (H2 monotonicity): urls admitted in round 0
+    stay seen in every later round, next to fresh urls of those rounds."""
+    table = ensure_seen_store(spark, str(tmp_path / "mono"), 2, fresh=True)
     urls = _urls(50)
-    py.add_all(urls)
-    assert py.add_all(urls) == []
+    fresh0, _ = _admit(spark, table, _cand(spark, urls, 0), 2, -1, 0)
+    assert sorted(fresh0) == sorted(urls)
+    for r in (1, 2):
+        more = _urls(10, f"http://h.org/r{r}/")
+        fresh, _ = _admit(spark, table, _cand(spark, urls + more, r), 2, r - 1, r)
+        assert sorted(fresh) == sorted(more)
+    spark.sql(f"drop table {table}")
+
+
+def test_engine_rejects_other_seen_modes():
+    """The bucketed store is the engine's only seen path: any other
+    ``mode`` is refused before the engine touches its inputs."""
+    from geocrawl_spark.frontier import CrawlEngine
+
+    with pytest.raises(ValueError, match="abucket"):
+        CrawlEngine(None, None, None, None, None, "unused", mode="bloom")

@@ -43,11 +43,8 @@ def _mk_engine(spark, fixtures, tmpdir, **kw):
         ),
         hostbudget=spark.createDataFrame(fixtures["budget"]),
         base_dir=str(tmpdir),
-        mode="exact",
-        n_shards=4,
         salt=4,
-        m_bits=1 << 18,
-        k=7,
+        n_buckets=4,
         **kw,
     )
 
@@ -204,7 +201,7 @@ def test_robots_sitemap_directive_golden(spark, rsm_fixtures, tmp_path_factory):
         ),
         hostbudget=spark.createDataFrame(rsm_fixtures["budget"]),
         base_dir=str(tmp_path_factory.mktemp("rsm")),
-        mode="exact", n_shards=4, salt=4, m_bits=1 << 18, k=7,
+        salt=4, n_buckets=4,
         use_sitemaps=True,
     )
     eng.run(max_rounds=50)

@@ -98,7 +98,6 @@ def test_stream_ingested_pages_drive_engine(spark, tmp_path):
             ),
             hostbudget=spark.createDataFrame(synth.gen_hostbudget(4)),
             base_dir=base,
-            mode="abucket",
             n_buckets=2,
         )
         return eng, eng.run(max_rounds=12)
@@ -170,7 +169,7 @@ def test_streaming_seen_filter_exactly_once(spark, tmp_path):
     ).parquet(src)
 
     stream = read_page_stream(spark, src, max_files_per_trigger=1)
-    out = streaming_seen_filter(stream, n_shards=4)
+    out = streaming_seen_filter(stream, 4)
     q = (
         out.writeStream.format("memory")
         .queryName("seen_stream")
