@@ -30,6 +30,15 @@ leaves the previous round intact — resume re-reads the last committed
 round and, because ordering is a pure function of table state (never of
 task scheduling), replays to the identical ordering (tested in
 tests/test_crawl_golden.py::test_kill_resume).
+
+Latest-version rule (Iceberg's): a commit that does not touch a table
+leaves that table's current version visible.  ``commit_round`` declares
+exactly the tables the round wrote, and ``read_latest(name, r)`` returns
+the newest committed round ``<= r`` that declared ``name`` — so a round
+that has nothing new for a table (a refresh, an empty fetch) simply does
+not write it, and readers see the previous version.  Visibility is
+decided from the manifest alone: the directory of a crashed or
+uncommitted round is never read.
 """
 
 from __future__ import annotations
@@ -51,10 +60,9 @@ class TableIO:
         # makes them durable (the manifest rename is the commit point)
         self._staged_partmaps: dict[tuple[str, int], dict[str, int]] = {}
         # tables actually written this process, per (name, round): the
-        # manifest's per-round table list is built from this, so a round
-        # that skipped a stage (e.g. the n_fetched==0 fast path writes no
-        # 'extracted') never declares a table it did not write —
-        # read_table(name, round) on a declared table always succeeds
+        # manifest's per-round table list is exactly this set, so a round
+        # never declares a table it did not write — read_table(name,
+        # round) on a declared table always succeeds
         self._written: set[tuple[str, int]] = set()
 
     # -- manifest ----------------------------------------------------------
@@ -169,18 +177,32 @@ class TableIO:
             return spark.read.parquet(*paths)
         return spark.read.parquet(self._table_path(name, round_no))
 
-    def commit_round(self, round_no: int, tables: list[str]) -> None:
-        """Commit: ``tables`` is the candidate list; only those actually
-        written this round (tracked by mark_written) are declared, so the
-        manifest stays an accurate inventory — a fast-path round that
-        skipped a stage never declares the table that stage would have
-        written (resume/rollback tooling can trust the list)."""
+    def read_latest(
+        self, spark: SparkSession, name: str, upto_round: int
+    ) -> DataFrame | None:
+        """The current version of ``name`` as of ``upto_round``: the
+        table of the newest committed round ``<= upto_round`` whose
+        manifest entry declares it, or None when no such round exists."""
+        m = self._read_manifest()
+        rounds = [
+            r for r in m["committed"]
+            if r <= upto_round and name in m["tables"].get(str(r), [])
+        ]
+        if not rounds:
+            return None
+        return self.read_table(spark, name, max(rounds))
+
+    def commit_round(self, round_no: int) -> None:
+        """Commit: declare exactly the tables written for ``round_no``
+        (write_table / write_table_delta / mark_written), so the
+        manifest stays an accurate inventory that read_latest and
+        rollback can trust."""
         m = self._read_manifest()
         if round_no not in m["committed"]:
             m["committed"].append(round_no)
-        m["tables"][str(round_no)] = [
-            t for t in tables if (t, round_no) in self._written
-        ]
+        m["tables"][str(round_no)] = sorted(
+            t for t, r in self._written if r == round_no
+        )
         for (name, rno), pmap in list(self._staged_partmaps.items()):
             if rno == round_no:
                 m.setdefault("partitions", {}).setdefault(name, {})[str(rno)] = pmap

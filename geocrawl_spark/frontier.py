@@ -135,6 +135,12 @@ def global_sequence(
     ).drop("_file")
 
 
+def _union_opt(prev: DataFrame | None, now: DataFrame) -> DataFrame:
+    """``now`` appended to ``prev``, or ``now`` alone when there is no
+    previous version of a cumulative per-host table yet."""
+    return now if prev is None else prev.unionByName(now)
+
+
 class CrawlEngine:
     def __init__(
         self,
@@ -210,9 +216,9 @@ class CrawlEngine:
         #: majority-missing (2*missing >= popped, missing > 0) gets its
         #: base budget halved (floor, min 1) THIS round, before carry and
         #: crawl-delay caps.  Deterministic integer rule, twinned in
-        #: pyref.PyRefCrawl(adaptive_budget=True); per-round (host,
-        #: popped, missing) stats persist as the ``hosterr`` table so a
-        #: resumed engine continues identically.
+        #: pyref.PyRefCrawl(adaptive_budget=True); the rule reads the
+        #: latest committed ``host_log`` (popped = fetched + missing), so
+        #: a resumed engine continues identically.
         self.adaptive_budget = adaptive_budget
         #: Opt-in crawl prioritization: (host, rank) dimension with rank
         #: in [0, pol.PRIO_RANK_MAX] integer millionths — e.g.
@@ -235,8 +241,8 @@ class CrawlEngine:
         #: depth * PRIO_SCALE + (PRIO_RANK_MAX - score) (the same
         #: politeness.PRIO_* composition as host_rank, so depth stays
         #: the major key).  Integer floor math end-to-end; the
-        #: cumulative (host, sum_chars, n_docs) persists per round as
-        #: the ``hostqual`` table, so a resumed engine continues
+        #: cumulative (host, sum_chars, n_docs) persists as the
+        #: ``hostqual`` table, so a resumed engine continues
         #: identically, and rows already stamped keep their priority (a
         #: host's later quality never rewrites history — matches the
         #: pyref twin).  Mutually exclusive with the static host_rank
@@ -260,8 +266,8 @@ class CrawlEngine:
         #: monopolizing its budget share.  Deterministic integer rule,
         #: twinned in pyref.PyRefCrawl(trap_guard=True); the cumulative
         #: per-host (n_fetched, n_disc, max_depth) stats persist as the
-        #: ``hosttrap`` table every round (incl. refresh commits — the
-        #: hosterr lesson), so a resumed engine continues identically.
+        #: ``hosttrap`` table, read at its latest committed version, so
+        #: a resumed engine continues identically.
         self.trap_guard = trap_guard
         #: Opt-in MIRROR quarantine (crawl hygiene — the engine half of
         #: queries_pipeline.source_overlap_matrix's corpus-level report):
@@ -275,10 +281,10 @@ class CrawlEngine:
         #: still drains every admitted url (final seen set unchanged).
         #: The quarantine LIFTS if the ratio recovers.  Deterministic
         #: integer rule, twinned in pyref.PyRefCrawl(mirror_guard=True);
-        #: cumulative (host, n_fetched, n_dup) persists per round as the
-        #: ``hostdup`` table (written EVERY round incl. refresh commits —
-        #: the hosterr lesson), and each round's NEW hashes persist as a
-        #: ``contenthash`` partition, so a resumed engine continues
+        #: cumulative (host, n_fetched, n_dup) persists as the ``hostdup``
+        #: table (read at its latest committed version), and each round's
+        #: NEW hashes persist as a ``contenthash`` partition, so a
+        #: resumed engine continues
         #: identically.  Composition note: refresh() re-fetches serve
         #: UNCHANGED content as dups by design — the dup ratio doubles as
         #: a change-rate signal — while set_pages() snapshots with real
@@ -426,12 +432,9 @@ class CrawlEngine:
             lambda: self._stats_dict(stats_all)
         ), append_fn
 
-    def _empty_carry(self) -> DataFrame:
-        return self.spark.createDataFrame([], "host string, carry long")
-
     def _effective_budget(
         self,
-        carry: DataFrame,
+        carry: DataFrame | None,
         err: DataFrame | None = None,
         trap: DataFrame | None = None,
         mirror: DataFrame | None = None,
@@ -440,6 +443,7 @@ class CrawlEngine:
         that under-used its budget in round k gets the leftover — capped
         at one base budget — as credit in round k+1), then capped by the
         robots crawl-delay rate max(1, floor(round_seconds / delay)).
+        Every per-host input may be None (no state yet).
 
         ``err`` (adaptive mode): last round's (host, popped, missing)
         stats; a majority-missing host's base is halved (floor, min 1)
@@ -464,13 +468,13 @@ class CrawlEngine:
                     F.expr(f"coalesce(_base, {pol.DEFAULT_BUDGET}) div 2"),
                 ),
             ).otherwise(base0)
-        uncapped = base0 + F.coalesce(F.col("carry"), F.lit(0))
+        uncapped = (
+            base0 if carry is None
+            else base0 + F.coalesce(F.col("carry"), F.lit(0))
+        )
         delay_cap = pol.crawl_delay_cap_expr(
             F.col("crawl_delay"), self.round_seconds
         )
-        joined = base.join(carry, "host", "full")
-        if err is not None:
-            joined = joined.join(err, "host", "full")
         budget = F.least(uncapped, F.coalesce(delay_cap, uncapped))
         if trap is not None:
             budget = F.when(
@@ -482,15 +486,15 @@ class CrawlEngine:
             budget = F.when(
                 F.coalesce(F.col("mirrored"), F.lit(False)), F.lit(1)
             ).otherwise(budget)
-        joined = joined.join(self.robots.select("host", "crawl_delay"), "host", "full")
-        if trap is not None:
-            # FULL join (like every other host dim here): a trapped host
-            # absent from hostbudget/carry/robots must still surface, or
-            # pop_batch's DEFAULT_BUDGET coalesce would bypass the
-            # quarantine (pyref overrides every pending host)
-            joined = joined.join(trap, "host", "full")
-        if mirror is not None:
-            joined = joined.join(mirror, "host", "full")
+        # FULL joins on every host dimension: a trapped host absent from
+        # hostbudget/carry/robots must still surface, or pop_batch's
+        # DEFAULT_BUDGET coalesce would bypass the quarantine (pyref
+        # overrides every pending host)
+        joined = base
+        robots = self.robots.select("host", "crawl_delay")
+        for dim in (carry, err, robots, trap, mirror):
+            if dim is not None:
+                joined = joined.join(dim, "host", "full")
         return joined.select("host", budget.cast("long").alias("budget"))
 
     def _new_carry(self, pend_h: DataFrame, done_h: DataFrame, eff: DataFrame) -> DataFrame:
@@ -512,17 +516,14 @@ class CrawlEngine:
             .filter(F.col("carry") > 0)
         )
 
-    def _quality_rank_dim(
-        self, round_no: int, prev_qual: DataFrame | None
-    ) -> DataFrame | None:
+    def _quality_rank_dim(self, prev_qual: DataFrame | None) -> DataFrame | None:
         """Per-round prioritization dimension from the crawl's own content
-        quality: ``prev_qual`` (the hostqual@(round_no-1) read run_round
-        already holds — projecting it here avoids a second scan of the
-        same per-round table) -> (host, rank) with rank =
+        quality: ``prev_qual`` (the latest hostqual through round-1, which
+        run_round already holds) -> (host, rank) with rank =
         min(PRIO_RANK_MAX, sum_chars div n_docs).  One row per fetched
         host — broadcast into discovery stamping, never a shuffle.  None
-        for round 0 (no history yet: every host scores 0)."""
-        if not self.quality_rank or round_no == 0 or prev_qual is None:
+        while no history exists (every host scores 0)."""
+        if prev_qual is None:
             return None
         return prev_qual.select(
             "host",
@@ -531,12 +532,14 @@ class CrawlEngine:
             ).cast("long").alias("rank"),
         )
 
-    def _trap_dim(self, prev_trap: DataFrame) -> DataFrame:
+    def _trap_dim(self, prev_trap: DataFrame | None) -> DataFrame | None:
         """(host, trapped=true) rows for hosts whose cumulative stats
         through the previous round trip the quarantine rule: at least one
         fetch, discoveries >= trap_fanout x fetches, and a discovery seen
         at depth >= trap_depth.  One row per trapped host, folded into
-        the tiny per-host budget dimension."""
+        the tiny per-host budget dimension; None without stats."""
+        if prev_trap is None:
+            return None
         return (
             prev_trap.filter(
                 (F.col("n_fetched") >= 1)
@@ -546,12 +549,14 @@ class CrawlEngine:
             .select("host", F.lit(True).alias("trapped"))
         )
 
-    def _mirror_dim(self, prev_dup: DataFrame) -> DataFrame:
+    def _mirror_dim(self, prev_dup: DataFrame | None) -> DataFrame | None:
         """(host, mirrored=true) rows for hosts whose cumulative fetch
         history through the previous round is majority-duplicate content:
         n_fetched >= mirror_min (the small-sample guard) and
         2*n_dup >= n_fetched.  One row per quarantined host, folded into
         the tiny per-host budget dimension like :meth:`_trap_dim`."""
+        if prev_dup is None:
+            return None
         return (
             prev_dup.filter(
                 (F.col("n_fetched") >= self.mirror_min)
@@ -692,86 +697,47 @@ class CrawlEngine:
             seeds = seeds.unionByName(sitemaps)
         flagged, parents, stats_fn, append_seen = self._admit(seeds, 0)
         counters = {k: 0 for k in COUNTER_KEYS}
-        with ThreadPoolExecutor(max_workers=8) as pool:
-            f_stats = pool.submit(stats_fn)
-            sall = f_stats.result()
-            pstats = sall.get("page", {"deduped": 0, "fresh": 0})
-            counters["deduped"] = pstats["deduped"]
-            counters["robots_denied"] = sum(
-                v.get("denied", 0) for v in sall.values()
-            )
-            counters["discovered"] = pstats["fresh"] - counters["robots_denied"]
-            self._mark(marks, "admit_stats")
-            writes = [
-                pool.submit(
-                    self.io.write_table_delta,
-                    self._frontier_rows(flagged, 0), "frontier", 0,
-                    "discovered_round", [0], None,
-                ),
-                pool.submit(
-                    self.io.write_table, flagged.select("url", "kind"), "admitted", 0
-                ),
-                pool.submit(self.io.write_table, self._empty_carry(), "hostcarry", 0),
-                pool.submit(self._write_counters, counters, 0),
-            ]
-            if self.adaptive_budget:
-                # round 0 pops nothing — seed the feedback loop empty so
-                # round 1's hosterr read always resolves (incl. on resume)
-                writes.append(
-                    pool.submit(
-                        self.io.write_table,
-                        self.spark.createDataFrame(
-                            [], "host string, popped long, missing long"
-                        ),
-                        "hosterr",
-                        0,
-                    )
+        # round 0 writes no per-host feedback table: run_round reads each
+        # one at its latest committed version, and an absent table means
+        # no state yet — except hosttrap, because round 0's admitted
+        # seeds ARE discoveries (depth 0, no fetch source)
+        try:
+            with ThreadPoolExecutor(max_workers=8) as pool:
+                f_stats = pool.submit(stats_fn)
+                sall = f_stats.result()
+                pstats = sall.get("page", {"deduped": 0, "fresh": 0})
+                counters["deduped"] = pstats["deduped"]
+                counters["robots_denied"] = sum(
+                    v.get("denied", 0) for v in sall.values()
                 )
-            if self.quality_rank:
-                # round 0 fetches nothing — seed the cumulative quality
-                # table empty so round 1's hostqual read always resolves
-                writes.append(
+                counters["discovered"] = pstats["fresh"] - counters["robots_denied"]
+                self._mark(marks, "admit_stats")
+                writes = [
                     pool.submit(
-                        self.io.write_table,
-                        self.spark.createDataFrame(
-                            [], "host string, sum_chars long, n_docs long"
-                        ),
-                        "hostqual",
-                        0,
-                    )
-                )
-            if self.trap_guard:
-                # round 0's admitted seeds ARE discoveries (depth 0, no
-                # fetch source) — seed the cumulative trap stats from
-                # them so round 1's hosttrap read always resolves
-                writes.append(
+                        self.io.write_table_delta,
+                        self._frontier_rows(flagged, 0), "frontier", 0,
+                        "discovered_round", [0], None,
+                    ),
                     pool.submit(
-                        self.io.write_table,
-                        self._trap_update(None, flagged, None),
-                        "hosttrap",
-                        0,
+                        self.io.write_table, flagged.select("url", "kind"), "admitted", 0
+                    ),
+                    pool.submit(self._write_counters, counters, 0),
+                ]
+                if self.trap_guard:
+                    writes.append(
+                        pool.submit(
+                            self.io.write_table,
+                            self._trap_update(None, flagged, None),
+                            "hosttrap",
+                            0,
+                        )
                     )
-                )
-            if self.mirror_guard:
-                # round 0 fetches nothing — seed the cumulative dup
-                # stats empty so round 1's hostdup read always resolves
-                # (contenthash needs no seed: absent partition == no
-                # hashes, and the membership union skips missing rounds)
-                writes.append(
-                    pool.submit(
-                        self.io.write_table,
-                        self.spark.createDataFrame(
-                            [], "host string, n_fetched long, n_dup long"
-                        ),
-                        "hostdup",
-                        0,
-                    )
-                )
-            for w in writes:
-                w.result()  # propagate failures BEFORE the commit point
-            self._mark(marks, "writes_joined")
-        for df in parents:
-            df.unpersist()
+                for w in writes:
+                    w.result()  # propagate failures BEFORE the commit point
+                self._mark(marks, "writes_joined")
+        finally:
+            for df in parents:
+                df.unpersist()
         append_seen(self.io.read_table(self.spark, "admitted", 0))
         self._mark(marks, "seen_persist")
         if os.environ.get("GEOCRAWL_PROFILE"):
@@ -780,11 +746,7 @@ class CrawlEngine:
                 for (label, t1), (_, t0) in zip(marks[1:], marks[:-1])
             ]
             print("[init_state] " + " ".join(spans), flush=True)
-        self.io.commit_round(
-            0,
-            ["frontier", "admitted", "hostcarry",
-             "crawl_log", "hosterr", "hostqual", "hosttrap", "hostdup"],
-        )
+        self.io.commit_round(0)
         return counters
 
     def _write_counters(self, counters: dict, round_no: int) -> None:
@@ -831,42 +793,34 @@ class CrawlEngine:
         # partition + per-partition rank + offsets, NEVER a global
         # single-partition window (tests/test_politeness.py asserts the
         # plan has no SinglePartition exchange).
-        carry = self.io.read_table(self.spark, "hostcarry", round_no - 1)
-        err = (
-            self.io.read_table(self.spark, "hosterr", round_no - 1)
-            if self.adaptive_budget
-            else None
-        )
-        # quality-feedback prioritization inputs: cumulative per-host
-        # quality THROUGH round-1 (this round's fetches update it for the
-        # NEXT round — discoveries are judged by what their host served
-        # before, the contract the pyref twin mirrors)
-        prev_qual = (
-            self.io.read_table(self.spark, "hostqual", round_no - 1)
-            if self.quality_rank
-            else None
-        )
-        rank_dim = self._quality_rank_dim(round_no, prev_qual)
-        # trap-guard quarantine input: cumulative per-host trap stats
-        # THROUGH round-1 (this round's discoveries update it for the
-        # NEXT round — same one-round feedback lag as hosterr/hostqual)
-        prev_trap = (
-            self.io.read_table(self.spark, "hosttrap", round_no - 1)
-            if self.trap_guard
-            else None
-        )
-        # mirror-guard quarantine input: cumulative per-host dup stats
-        # THROUGH round-1 (same one-round feedback lag as the others)
-        prev_dup = (
-            self.io.read_table(self.spark, "hostdup", round_no - 1)
-            if self.mirror_guard
-            else None
-        )
+        # Per-host state is read at its latest committed version through
+        # round-1 (a refresh or an empty-fetch round writes no new
+        # version); None means no state yet: zero carry, score 0, no
+        # quarantine.  Each feedback input is cumulative THROUGH round-1 —
+        # this round's fetches and discoveries update it for the NEXT
+        # round, the one-round lag the pyref twin mirrors.
+        def latest(name: str, on: bool = True) -> DataFrame | None:
+            return self.io.read_latest(self.spark, name, round_no - 1) if on else None
+
+        carry = latest("hostcarry")
+        # adaptive budgets: last crawl round's (host, popped, missing) for
+        # the hosts it actually popped, from its host_log
+        err = latest("host_log", self.adaptive_budget)
+        if err is not None:
+            err = err.select(
+                "host",
+                (F.col("fetched") + F.col("missing")).alias("popped"),
+                "missing",
+            ).filter(F.col("popped") > 0)
+        prev_qual = latest("hostqual", self.quality_rank)
+        rank_dim = self._quality_rank_dim(prev_qual)
+        prev_trap = latest("hosttrap", self.trap_guard)
+        prev_dup = latest("hostdup", self.mirror_guard)
         eff_budget = self._effective_budget(
             carry,
             err,
-            self._trap_dim(prev_trap) if self.trap_guard else None,
-            self._mirror_dim(prev_dup) if self.mirror_guard else None,
+            self._trap_dim(prev_trap),
+            self._mirror_dim(prev_dup),
         )
         self._mark(marks, "budget_built")
         # Project the pop input to the columns the batch actually carries
@@ -935,31 +889,13 @@ class CrawlEngine:
                 # analysis of the big parse expression trees) per round.  The
                 # per-round tables they would have written empty are simply
                 # absent — read_all_rounds unions only existing paths, and the
-                # pyref oracle produces the same zero counters.  The seen
-                # store needs no write at all (absent partition == no new
-                # hashes).
+                # pyref oracle produces the same zero counters.  Nothing
+                # fetched leaves the quality and dup histories unchanged,
+                # so their latest versions stay current (no write), as
+                # does the seen store (absent partition == no new hashes).
                 flagged = self.spark.createDataFrame(
                     [], "url string, host string, depth long, kind string, denied boolean"
                 ).persist()
-                kinded = None
-                parents, parsed = [], None
-                f_nassets = f_ndead = None
-                if self.quality_rank:
-                    # nothing fetched -> quality history unchanged; carry it
-                    writes.append(
-                        pool.submit(
-                            self.io.write_table, prev_qual, "hostqual", round_no
-                        )
-                    )
-                if self.mirror_guard:
-                    # nothing fetched -> dup history unchanged; carry it
-                    # (no contenthash write: absent partition == no new
-                    # hashes, the seen-store precedent)
-                    writes.append(
-                        pool.submit(
-                            self.io.write_table, prev_dup, "hostdup", round_no
-                        )
-                    )
                 self._mark(marks, "fastpath_empty_fetch")
             else:
                 # --- extract text (byte-identity invariant) + provenance -----
@@ -991,7 +927,7 @@ class CrawlEngine:
                         F.count("*").cast("long").alias("n_docs"),
                     )
                     new_qual = (
-                        prev_qual.unionByName(qual_now)
+                        _union_opt(prev_qual, qual_now)
                         .groupBy("host")
                         .agg(
                             F.sum("sum_chars").cast("long").alias("sum_chars"),
@@ -1043,7 +979,7 @@ class CrawlEngine:
                         .alias("n_dup"),
                     )
                     new_dup = (
-                        prev_dup.unionByName(dup_now)
+                        _union_opt(prev_dup, dup_now)
                         .groupBy("host")
                         .agg(
                             F.sum("n_fetched").cast("long").alias("n_fetched"),
@@ -1294,26 +1230,10 @@ class CrawlEngine:
                 .alias("deferred_politeness"),
             )
             writes.append(pool.submit(self.io.write_table, host_log, "host_log", round_no))
-            if self.adaptive_budget:
-                # next round's feedback input: (host, popped, missing) for
-                # hosts this round actually popped (derived from the shared
-                # persisted done_h — no extra scan)
-                hosterr = done_h.select(
-                    "host",
-                    F.col("n_batch").cast("long").alias("popped"),
-                    (F.col("n_batch") - F.col("n_fetched"))
-                    .cast("long")
-                    .alias("missing"),
-                )
-                writes.append(
-                    pool.submit(self.io.write_table, hosterr, "hosterr", round_no)
-                )
             if self.trap_guard:
                 # cumulative trap stats for the next round's quarantine
-                # decision; on the empty-fetch fast path flagged is empty
-                # and done_h adds zero fetches, so this degenerates to a
-                # carry-forward — hosttrap is written EVERY round (the
-                # hosterr lesson: any per-round feedback table must be)
+                # decision (on the empty-fetch fast path flagged is empty
+                # and done_h adds zero fetches)
                 writes.append(
                     pool.submit(
                         self.io.write_table,
@@ -1392,20 +1312,7 @@ class CrawlEngine:
         if append_seen is not None:
             append_seen(self.io.read_table(self.spark, "admitted", round_no))
         self._mark(marks, "seen_persist")
-        self.io.commit_round(
-            round_no,
-            ["frontier", "admitted", "hostcarry",
-             "crawl_log", "extracted", "metadata", "dead_letters", "host_log",
-             "links",  # opt-in link-graph log (declared only when written)
-             "sitemapmeta",  # opt-in sitemap lastmod freshness (ditto)
-             "hosterr",  # opt-in adaptive-budget feedback (ditto)
-             "hostqual",  # opt-in quality-feedback prioritization (ditto)
-             "hosttrap",  # opt-in spider-trap quarantine stats (ditto)
-             "hostdup",  # opt-in mirror-quarantine dup stats (ditto)
-             "contenthash",  # opt-in per-round first-seen content hashes
-             "batch"],  # batch = global_sequence's range files (committed,
-                        # so rollback cleans them — no orphan scratch dirs)
-        )
+        self.io.commit_round(round_no)
         self._mark(marks, "commit")
         if os.environ.get("GEOCRAWL_PROFILE"):
             spans = [
@@ -1567,13 +1474,15 @@ class CrawlEngine:
         frontier — its re-extracted links simply dedupe against the seen
         set (counted, like any repeat observation).
 
-        Commit shape: one MERGE delta on the frontier touching ONLY the
-        BFS layers containing refreshed rows (O(selected layers), never
-        O(frontier)) + the unchanged hostcarry snapshot carried forward
-        (the seen store needs no write), committed as a round of its own (no crawl_log /
-        host_log rows — the manifest records exactly what a refresh
-        wrote).  A kill mid-refresh leaves the previous round intact
-        (the manifest rename is the commit point, as everywhere).
+        Commit shape: ONE write — a MERGE delta on the frontier touching
+        ONLY the BFS layers containing refreshed rows (O(selected
+        layers), never O(frontier)) — committed as a round of its own
+        that declares only ``frontier``.  Every per-host state table
+        (carry, feedback stats) and the seen store are untouched, so the
+        next round reads their latest versions from before the refresh;
+        no crawl_log / host_log rows are written.  A kill mid-refresh
+        leaves the previous round intact (the manifest rename is the
+        commit point, as everywhere).
 
         Returns the number of re-queued urls (0 commits nothing)."""
         r_prev = self.io.latest_round()
@@ -1614,51 +1523,7 @@ class CrawlEngine:
         self.io.write_table_delta(
             rewritten, "frontier", round_no, "discovered_round", touched, r_prev
         )
-        self.io.write_table(
-            self.io.read_table(self.spark, "hostcarry", r_prev), "hostcarry", round_no
-        )
-        if self.adaptive_budget:
-            # adaptive engines read hosterr@round-1 unconditionally in
-            # run_round — carry the last crawl round's feedback forward
-            # (like hostcarry) or the first post-refresh round
-            # dies on a missing table and the committed refresh round
-            # poisons every subsequent run() until a manual rollback
-            self.io.write_table(
-                self.io.read_table(self.spark, "hosterr", r_prev),
-                "hosterr",
-                round_no,
-            )
-        if self.quality_rank:
-            # quality-rank engines read hostqual@round-1 unconditionally in
-            # run_round — carry the cumulative quality history across the
-            # refresh commit exactly like hosterr/hostcarry above
-            self.io.write_table(
-                self.io.read_table(self.spark, "hostqual", r_prev),
-                "hostqual",
-                round_no,
-            )
-        if self.trap_guard:
-            # trap-guard engines read hosttrap@round-1 unconditionally in
-            # run_round — same carry rule as hosterr/hostqual above
-            self.io.write_table(
-                self.io.read_table(self.spark, "hosttrap", r_prev),
-                "hosttrap",
-                round_no,
-            )
-        if self.mirror_guard:
-            # mirror-guard engines read hostdup@round-1 unconditionally in
-            # run_round — same carry rule (contenthash needs none: the
-            # membership union skips rounds with no partition)
-            self.io.write_table(
-                self.io.read_table(self.spark, "hostdup", r_prev),
-                "hostdup",
-                round_no,
-            )
-        self.io.commit_round(
-            round_no,
-            ["frontier", "hostcarry", "hosterr",
-             "hostqual", "hosttrap", "hostdup"],
-        )
+        self.io.commit_round(round_no)
         return int(n_sel)
 
     def compact_seen(self, upto_round: int) -> dict | None:

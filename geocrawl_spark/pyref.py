@@ -271,7 +271,7 @@ class PyRefCrawl:
         rows, deduped, denied = self._admit(cands, 0)
         if self.trap_guard:
             # round 0's admitted seeds ARE discoveries (depth 0, no
-            # fetch source) — engine seeds hosttrap@0 the same way
+            # fetch source) — the engine writes them as hosttrap@0
             self._trap_fold(rows)
         for r in rows:
             self.frontier[r["url"]] = r
@@ -355,7 +355,8 @@ class PyRefCrawl:
                 # content_seen updates immediately (within-round ordering
                 # by fetch_seq — this loop IS that order); per-host stats
                 # fold after the round so the quarantine decision used
-                # stats through r-1, like the engine's hostdup@r-1 read
+                # stats through r-1, like the engine's read of the latest
+                # hostdup through r-1
                 ch = xxh64_signed(self.extracted[row["url"]].encode())
                 rm = round_mirror.setdefault(row["host"], [0, 0])
                 rm[0] += 1
@@ -431,17 +432,19 @@ class PyRefCrawl:
         rows, deduped, denied = self._admit(cands, round_no)
         if self.trap_guard:
             # fold AFTER the round's eff was computed: the engine's
-            # quarantine reads hosttrap@round-1 (one-round feedback lag)
+            # quarantine reads the latest hosttrap through round-1
+            # (one-round feedback lag)
             self._trap_fold(rows, per_host)
         if self.quality_rank:
             # fold AFTER _admit: this round's fetches must not influence
-            # this round's discovery priorities (engine reads hostqual@r-1)
+            # this round's discovery priorities (the engine reads the
+            # latest hostqual through r-1)
             for h, (sc, nd) in round_qual.items():
                 psc, pnd = self.qual.get(h, (0, 0))
                 self.qual[h] = (psc + sc, pnd + nd)
         if self.mirror_guard:
             # fold AFTER the round's eff was computed (one-round lag —
-            # the engine reads hostdup@round-1)
+            # the engine reads the latest hostdup through round-1)
             for h, (nf, nd) in round_mirror.items():
                 m = self.mirror.setdefault(h, [0, 0])
                 m[0] += nf
@@ -495,6 +498,7 @@ class PyRefCrawl:
             counters["assets_extracted"] += emitted
 
         if self.adaptive_budget:
+            # the engine derives the same rows from its latest host_log
             self.prev_err = {
                 h: (d["fetched"] + d["missing"], d["missing"])
                 for h, d in per_host.items()

@@ -1,5 +1,8 @@
 """TableIO MERGE-style partial rewrites: partition ownership across
-rounds, snapshot assembly, commit atomicity, rollback."""
+rounds, snapshot assembly, commit atomicity, rollback; the latest-version
+read rule and the manifest's per-round table inventory."""
+
+import os
 
 import pandas as pd
 import pytest
@@ -28,13 +31,13 @@ def test_delta_write_rewrites_only_touched_partitions(spark, tmp_path):
         _df(spark, [("a", 0, "pending"), ("b", 0, "pending"), ("c", 1, "pending")]),
         "frontier", 0, "layer", [0, 1], None,
     )
-    io.commit_round(0, ["frontier"])
+    io.commit_round(0)
     # round 1: layer 0 rewritten (a fetched), layer 2 appended; layer 1 untouched
     io.write_table_delta(
         _df(spark, [("a", 0, "fetched"), ("b", 0, "pending"), ("d", 2, "pending")]),
         "frontier", 1, "layer", [0, 2], 0,
     )
-    io.commit_round(1, ["frontier"])
+    io.commit_round(1)
 
     assert _snap(io, spark, 0) == [
         ("a", 0, "pending"), ("b", 0, "pending"), ("c", 1, "pending")
@@ -53,7 +56,7 @@ def test_delta_uncommitted_round_invisible_and_rollback(spark, tmp_path):
     io.write_table_delta(
         _df(spark, [("a", 0, "pending")]), "frontier", 0, "layer", [0], None
     )
-    io.commit_round(0, ["frontier"])
+    io.commit_round(0)
     io.write_table_delta(
         _df(spark, [("a", 0, "fetched")]), "frontier", 1, "layer", [0], 0
     )
@@ -62,7 +65,7 @@ def test_delta_uncommitted_round_invisible_and_rollback(spark, tmp_path):
     assert io2.latest_round() == 0
     assert _snap(io2, spark, 0) == [("a", 0, "pending")]
     # commit then roll back: partition maps of dropped rounds disappear
-    io.commit_round(1, ["frontier"])
+    io.commit_round(1)
     io.rollback_to(0)
     m = io._read_manifest()
     assert list(m["partitions"]["frontier"]) == ["0"]
@@ -74,26 +77,75 @@ def test_delta_fully_emptied_partition(spark, tmp_path):
     io.write_table_delta(
         _df(spark, [("a", 0, "pending")]), "frontier", 0, "layer", [0], None
     )
-    io.commit_round(0, ["frontier"])
+    io.commit_round(0)
     # round 1 rewrites layer 0 to EMPTY and adds layer 1
     io.write_table_delta(
         _df(spark, [("b", 1, "pending")]), "frontier", 1, "layer", [0, 1], 0
     )
-    io.commit_round(1, ["frontier"])
+    io.commit_round(1)
     assert _snap(io, spark, 1) == [("b", 1, "pending")]
 
 
-def test_no_orphan_round_dirs_after_crawl(spark, tmp_path):
-    """Every directory under rounds/rN is a table named in that round's
-    manifest entry (VERDICT r2 'what's wrong' #4: global_sequence's batch
-    scratch used to accumulate unregistered) — so rollback_to leaves no
-    orphans and a resumed crawl's disk state is fully manifest-described."""
-    import os
+def _vals(df):
+    return sorted(r["v"] for r in df.collect())
 
+
+def _one(spark, v):
+    return spark.createDataFrame([(v,)], "v long")
+
+
+def test_read_latest_absent_table_is_none(spark, tmp_path):
+    io = TableIO(str(tmp_path))
+    assert io.read_latest(spark, "t", 0) is None  # no manifest yet
+    io.write_table(_one(spark, 1), "other", 0)
+    io.commit_round(0)
+    assert io.read_latest(spark, "t", 0) is None
+    assert _vals(io.read_latest(spark, "other", 0)) == [1]
+
+
+def test_read_latest_newest_committed_version(spark, tmp_path):
+    io = TableIO(str(tmp_path))
+    io.write_table(_one(spark, 0), "t", 0)
+    io.commit_round(0)
+    io.commit_round(1)  # a round that did not touch t
+    io.write_table(_one(spark, 2), "t", 2)
+    io.commit_round(2)
+    io.commit_round(3)
+    assert _vals(io.read_latest(spark, "t", 3)) == [2]
+    assert _vals(io.read_latest(spark, "t", 2)) == [2]
+    assert _vals(io.read_latest(spark, "t", 1)) == [0]
+
+    # a crashed round's files are on disk but never visible: the
+    # manifest alone decides
+    io.write_table(_one(spark, 4), "t", 4)
+    assert os.path.isdir(io._table_path("t", 4))
+    io2 = TableIO(str(tmp_path))
+    assert _vals(io2.read_latest(spark, "t", 5)) == [2]
+
+    io2.rollback_to(1)
+    assert _vals(io2.read_latest(spark, "t", 5)) == [0]
+
+
+def test_commit_round_declares_exactly_the_written_tables(spark, tmp_path):
+    io = TableIO(str(tmp_path))
+    io.write_table(_one(spark, 1), "b", 0)
+    io.write_table(_one(spark, 1), "a", 0)
+    io.mark_written("c", 0)
+    io.write_table(_one(spark, 1), "a", 1)  # another round's write
+    io.commit_round(0)
+    assert io._read_manifest()["tables"]["0"] == ["a", "b", "c"]
+    io.commit_round(1)
+    io.commit_round(2)
+    m = io._read_manifest()
+    assert m["tables"]["1"] == ["a"]
+    assert m["tables"]["2"] == []
+
+
+def _small_engine(spark, base_dir):
     from geocrawl_spark import synth
     from geocrawl_spark.frontier import CrawlEngine
 
-    eng = CrawlEngine(
+    return CrawlEngine(
         spark,
         pages=spark.createDataFrame(
             synth.gen_pages(60, 4),
@@ -105,12 +157,57 @@ def test_no_orphan_round_dirs_after_crawl(spark, tmp_path):
             "host string, disallow array<string>, allow array<string>",
         ),
         hostbudget=spark.createDataFrame(synth.gen_hostbudget(4)),
-        base_dir=str(tmp_path / "crawl"),
+        base_dir=str(base_dir),
         n_buckets=2,
     )
+
+
+def test_init_state_failed_write_releases_cache(spark, tmp_path, monkeypatch):
+    """A failing round-0 write surfaces as an error, leaves no round
+    committed, and still drops the admission pass's cache."""
+    eng = _small_engine(spark, tmp_path / "crawl")
+    parents = []
+    admit = eng._admit
+
+    def capture(*args, **kwargs):
+        out = admit(*args, **kwargs)
+        parents.extend(out[1])
+        return out
+
+    write_table = eng.io.write_table
+
+    def failing(df, name, round_no):
+        if name == "admitted":
+            raise OSError("injected admitted write failure")
+        return write_table(df, name, round_no)
+
+    monkeypatch.setattr(eng, "_admit", capture)
+    monkeypatch.setattr(eng.io, "write_table", failing)
+    with pytest.raises(OSError, match="injected"):
+        eng.init_state()
+    assert parents
+    assert not any(p.is_cached for p in parents)
+    assert eng.io.latest_round() is None
+
+
+def test_no_orphan_round_dirs_after_crawl(spark, tmp_path):
+    """Every directory under rounds/rN is a table named in that round's
+    manifest entry (VERDICT r2 'what's wrong' #4: global_sequence's batch
+    scratch used to accumulate unregistered) — so rollback_to leaves no
+    orphans and a resumed crawl's disk state is fully manifest-described.
+    A refresh commit writes and declares its frontier delta only."""
+    eng = _small_engine(spark, tmp_path / "crawl")
     eng.run(max_rounds=12)
+    urls = [u for _, _, u in eng.crawl_order()][:2]
+    assert eng.refresh(spark.createDataFrame([(u,) for u in urls], "url string")) == 2
     m = eng.io._read_manifest()
     rounds_dir = os.path.join(str(eng.io.base), "rounds")
+    r_refresh = str(eng.io.latest_round())
+    assert (
+        set(m["tables"][r_refresh])
+        == set(os.listdir(os.path.join(rounds_dir, "r" + r_refresh)))
+        == {"frontier"}
+    )
     seen = 0
     for rdir in os.listdir(rounds_dir):
         rno = rdir.lstrip("r")

@@ -347,9 +347,9 @@ def test_adaptive_budget_golden(spark, tmp_path_factory):
     """Opt-in error-rate budget feedback: a host whose popped batch was
     majority-missing gets its base budget halved next round (floor,
     min 1).  Engine == pyref exactly under the rule, including across a
-    kill/resume (the hosterr feedback table must persist); the feedback
-    BINDS (schedule differs from the non-adaptive run) while final
-    coverage is unchanged."""
+    kill/resume (the feedback is read back from the committed host_log);
+    the feedback BINDS (schedule differs from the non-adaptive run) while
+    final coverage is unchanged."""
     import datetime as dt
 
     import pandas as pd
@@ -410,7 +410,7 @@ def test_adaptive_budget_golden(spark, tmp_path_factory):
 
     eng = mk(tmp_path_factory.mktemp("adaptive"))
     # kill after round 2 (the round whose majority-missing stats trigger
-    # the round-3 halving) — resume must read hosterr@2 from disk
+    # the round-3 halving) — resume must read host_log@2 from disk
     eng.init_state()
     eng.run_round(1)
     eng.run_round(2)
@@ -431,7 +431,8 @@ def test_trap_guard_golden(spark, tmp_path_factory):
     rule trips once depth-3 discoveries land, and — because leaves add no
     new discoveries — LIFTS again when fetches catch up, exercising both
     transitions.  Engine == pyref exactly, including across a
-    kill/resume at the quarantine-trigger round (hosttrap must persist).
+    kill/resume at the quarantine-trigger round (the latest committed
+    hosttrap is read back from disk).
     """
     import datetime as dt
 
@@ -521,7 +522,7 @@ def test_trap_guard_golden(spark, tmp_path_factory):
 
     eng = mk(tmp_path_factory.mktemp("trapguard"))
     # kill after round 3 (the round whose depth-3 discoveries trip the
-    # quarantine) — resume must read hosttrap@3 from disk
+    # quarantine) — resume must read the latest hosttrap (@3) from disk
     eng.init_state()
     for r in (1, 2, 3):
         eng.run_round(r)

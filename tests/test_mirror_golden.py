@@ -118,7 +118,7 @@ def test_mirror_quarantine_golden(spark, fixtures, tmp_path):
     last = eng.io.latest_round()
     final = {
         r["host"]: (r["n_fetched"], r["n_dup"])
-        for r in eng.io.read_table(spark, "hostdup", last).collect()
+        for r in eng.io.read_latest(spark, "hostdup", last).collect()
     }
     assert final == {h: tuple(v) for h, v in ref.mirror.items()}
     # host01 mirrored exactly the 4 copied leaves; host00 is clean
@@ -140,11 +140,13 @@ def test_mirror_quarantine_golden(spark, fixtures, tmp_path):
     assert any(p == 2 for p in popped_b[popped_b.index(1):])
 
     # per-round hostdup trajectory shows the fire -> lift transition
+    # (the version current after each round; none before round 1)
     quarantined = []
     for r in range(0, last):
+        cur = eng.io.read_latest(spark, "hostdup", r)
         rows = {
             row["host"]: row
-            for row in eng.io.read_table(spark, "hostdup", r).collect()
+            for row in (cur.collect() if cur is not None else [])
         }
         b = rows.get(HOST_B)
         quarantined.append(

@@ -3,10 +3,9 @@ compact_seen_every + log_links + adaptive_budget + host_rank — through a
 full crawl, a refresh (recrawl) commit, a kill/resume, and the post-
 refresh recrawl, asserted exactly equal to a pyref twin configured the
 same way.  Each opt-in has its own golden; this one exists to catch
-interaction bugs between them (ADVICE r4 high: refresh() committed a
-round without the hosterr table, so the first post-refresh round of an
-adaptive-budget engine crashed on a missing-path read — reproduced by
-this test before the fix).
+interaction bugs between them — e.g. a refresh commit followed by the
+first post-refresh round of an adaptive-budget engine, which must read
+the per-host feedback at its latest version from before the refresh.
 """
 
 import pytest

@@ -5,8 +5,9 @@ feedback loop closed on the crawl's own content (host_quality_rollup's
 signal driving the scheduler), where host_rank closes it on the link
 graph.  Asserted exactly equal to the pyref twin: crawl ordering, seen
 set, per-round counters — alone, and composed with every other opt-in
-(compaction + link log + adaptive budgets) through refresh and kill/resume, the interaction surface where the
-hosterr-carry bug lived (ADVICE r4 high).
+(compaction + link log + adaptive budgets) through refresh and
+kill/resume, where every feedback table is read at its latest committed
+version across commits that did not write it.
 """
 
 import pytest
@@ -104,9 +105,10 @@ def test_quality_rank_composed_optins_refresh_resume(
 ):
     """quality_rank + compaction + link log + adaptive budgets
     + trap guard + mirror guard + sitemap discovery through crawl ->
-    refresh -> kill/resume -> post-refresh recrawl (every per-round feedback table — hosterr,
-    hostqual, hosttrap, hostdup — must survive the refresh commit and
-    the resume; the post-refresh re-fetches serve unchanged content, so
+    refresh -> kill/resume -> post-refresh recrawl (every per-host
+    feedback input — host_log, hostqual, hosttrap, hostdup — is read at
+    its latest version from before the refresh commit, also after the
+    resume; the post-refresh re-fetches serve unchanged content, so
     they count as dups on BOTH sides — the mirror stats double as a
     change-rate signal)."""
     kw = dict(
@@ -138,7 +140,7 @@ def test_quality_rank_composed_optins_refresh_resume(
     r_commit = eng.io.latest_round()
 
     # kill/resume: a brand-new engine continues from the manifest alone —
-    # including the hostqual table the refresh commit must carry forward
+    # including the hostqual version from before the refresh commit
     eng2 = _mk_engine(spark, fixtures, d, **kw)
     eng2_log = eng2.run(max_rounds=30)
     assert len(eng2_log) >= 1
