@@ -40,7 +40,6 @@ def main():
     spark.sparkContext.setLogLevel("ERROR")
 
     if do_engine:
-        os.environ.setdefault("GEOCRAWL_PROFILE", "1")
         import bench
 
         dt, n, splits = bench.engine_round(spark, warmup=True)

@@ -99,14 +99,7 @@ class TableIO:
         return os.path.join(self.base, "rounds", f"r{round_no}", name)
 
     def write_table(self, df: DataFrame, name: str, round_no: int) -> None:
-        import time
-
-        t0 = time.time()
         df.write.mode("overwrite").parquet(self._table_path(name, round_no))
-        if os.environ.get("GEOCRAWL_PROFILE"):
-            print(
-                f"[write {name}@r{round_no}] {time.time() - t0:.2f}s", flush=True
-            )
         self.mark_written(name, round_no)
 
     def mark_written(self, name: str, round_no: int) -> None:
@@ -140,17 +133,9 @@ class TableIO:
         )
         # _part mirrors part_col as the directory key so the data column
         # survives in the files (partitionBy drops its source column)
-        import time
-
-        t0 = time.time()
         df.withColumn("_part", F.col(part_col)).write.mode("overwrite").partitionBy(
             "_part"
         ).parquet(self._table_path(name, round_no))
-        if os.environ.get("GEOCRAWL_PROFILE"):
-            print(
-                f"[write-delta {name}@r{round_no}] {time.time() - t0:.2f}s",
-                flush=True,
-            )
         self.mark_written(name, round_no)
         new_map = dict(prev)
         for t in touched:
@@ -209,6 +194,19 @@ class TableIO:
                 del self._staged_partmaps[(name, rno)]
         self._write_manifest(m)
 
+    def forget_round(self, round_no: int) -> None:
+        """Drop what this process recorded for the uncommitted round
+        ``round_no``: its written tables and staged partition maps.  A
+        failed round calls this, so a later commit of the same round
+        number (a retry, a refresh) declares only what it wrote itself."""
+        self._forget(lambda r: r == round_no)
+
+    def _forget(self, dropped) -> None:
+        self._written = {(t, r) for t, r in self._written if not dropped(r)}
+        self._staged_partmaps = {
+            k: v for k, v in self._staged_partmaps.items() if not dropped(k[1])
+        }
+
     def rollback_to(self, round_no: int) -> None:
         """Drop snapshots after ``round_no`` (used by kill/resume tests).
         Partition maps of surviving rounds only ever reference owner rounds
@@ -235,5 +233,5 @@ class TableIO:
                 for k, v in m["partitions"][name].items()
                 if int(k) <= round_no
             }
-        self._staged_partmaps.clear()
+        self._forget(lambda r: r > round_no)
         self._write_manifest(m)

@@ -1,18 +1,31 @@
 """The crawl engine: batch-iterative frontier rounds (SURVEY.md §3.1, §7).
 
 One crawl round (the Spark restatement of the reference's
-producer/scheduler/worker loop, geocrawl/geocrawler.go:43-53):
+producer/scheduler/worker loop, geocrawl/geocrawler.go:43-53) is a
+sequence of named stage methods of :class:`CrawlEngine`:
 
-  pending frontier
-    -> pop_batch (per-host politeness top-k; ConcLimiter analog)
-    -> fetch (join against the pages table; GDALOpenEx analog)
-    -> extract text + links (vectorized UDFs; GetGDALMetadata analog)
-    -> explode + resolve + canonicalize candidates (pages + assets)
-    -> ONE seen-filter pass against the bucketed seen store (the walk's
-       visit-once guarantee)
-    -> robots gate (the -re regex gate analog)
-    -> admit new pending rows; extract geo-asset metadata; parse stage
-    -> counters + snapshot commit (H4)
+  _pending          pending frontier count, per-host pending
+  _budget           per-host budget from the latest per-host state
+  _pop_fetch        pop_batch (per-host politeness top-k; ConcLimiter
+                    analog) + fetch (join against the pages table;
+                    GDALOpenEx analog)
+  _extract          extract text (vectorized UDF; GetGDALMetadata analog)
+  _fan_out          explode + resolve + canonicalize link candidates
+                    (pages + assets, every discovery channel in one chain)
+  _admission        ONE seen-filter pass against the bucketed seen store
+                    (the walk's visit-once guarantee) + robots gate (the
+                    -re regex gate analog)
+  _assets           extract geo-asset metadata; parse stage
+  _host_lineage     per-host log, carry and trap stats
+  _frontier_merge   admit new pending rows (MERGE-style frontier delta)
+                    + counters
+
+There is ONE round-commit path: every stage submits its writes and
+collects to the round's :class:`_Round`, which joins them, drops the
+round's caches, appends the seen store and commits the snapshot (H4) —
+or, on failure, forgets the round.  ``init_state`` is round 0 of the
+_admission -> _frontier_merge stages, and ``refresh`` commits its
+frontier delta through the same path.
 
 Determinism contract (north_rule): every ordering below is a pure
 function of table state — per-host pop by (priority, url), fetch_seq by
@@ -40,15 +53,14 @@ Scale notes (100 TB design point):
   count on pending, one combined fetch agg (batch size + hits + touched
   BFS layers in a single job), one admission-stats agg read from the
   persisted seen-filter output — and every independent snapshot write /
-  stats collect is submitted from a driver thread pool so their Catalyst
-  analysis + scheduling latencies (the engine's fixed per-round cost)
-  overlap instead of summing; the manifest commit happens strictly after
-  all writes return.
+  stats collect is submitted to the round context's driver thread pool
+  so their Catalyst analysis + scheduling latencies (the engine's fixed
+  per-round cost) overlap instead of summing; the manifest commit
+  happens strictly after all writes return.
 """
 
 from __future__ import annotations
 
-import os
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -100,9 +112,6 @@ def global_sequence(
     # §5: cache exactly the reuse the plan cannot see).  The cache is
     # dropped as soon as the range files are written: every downstream
     # read uses the immutable parquet, so nothing ever recomputes df.
-    import time as _t
-
-    _t0 = _t.time()
     df = df.persist()
     try:
         df.repartitionByRange(n_parts, *order_cols).write.mode(
@@ -110,17 +119,11 @@ def global_sequence(
         ).parquet(scratch_path)
     finally:
         df.unpersist()
-    _t1 = _t.time()
     b = spark.read.parquet(scratch_path).withColumn("_file", F.input_file_name())
     counts = {
         r["_file"]: r["n"]
         for r in b.groupBy("_file").agg(F.count("*").alias("n")).collect()
     }
-    if os.environ.get("GEOCRAWL_PROFILE"):
-        print(
-            f"[gseq] range_write={_t1 - _t0:.2f}s counts={_t.time() - _t1:.2f}s",
-            flush=True,
-        )
     if not counts:
         return b.drop("_file").withColumn(seq_col, F.lit(None).cast("long"))
     offsets, acc = {}, 0
@@ -135,13 +138,209 @@ def global_sequence(
     ).drop("_file")
 
 
-def _union_opt(prev: DataFrame | None, now: DataFrame) -> DataFrame:
-    """``now`` appended to ``prev``, or ``now`` alone when there is no
-    previous version of a cumulative per-host table yet."""
-    return now if prev is None else prev.unionByName(now)
+def _cumulative(
+    prev: DataFrame | None, now: DataFrame, sums: tuple, maxes: tuple = ()
+) -> DataFrame:
+    """The next version of a cumulative per-host table: this round's
+    per-host rows ``now`` unioned with the previous version ``prev``
+    (None before the first), re-aggregated per host — the ``sums``
+    columns summed, the ``maxes`` columns maxed."""
+    rows = now if prev is None else prev.unionByName(now)
+    return rows.groupBy("host").agg(
+        *[F.sum(c).cast("long").alias(c) for c in sums],
+        *[F.max(c).cast("long").alias(c) for c in maxes],
+    )
+
+
+class _Round:
+    """One round's commit path, opened as ``with _Round(io, spark, r)``.
+
+    Every independent snapshot write and stats collect of the round is
+    submitted to one driver thread pool: each Spark action pays Catalyst
+    analysis + job scheduling on its calling thread, and that fixed
+    latency — not dataflow — dominates a round at moderate batch sizes,
+    so overlapping the ~10 independent actions is the single biggest
+    round-latency lever.
+
+    On a clean exit it joins every write (a failed write surfaces BEFORE
+    the commit point), shuts the pool, unpersists every cache it holds,
+    appends the seen store from the round's written ``admitted`` table,
+    then commits the round; a round that wrote nothing (a drained
+    frontier, an empty refresh) commits nothing.  On failure it cancels
+    the queued work, unpersists, and makes TableIO forget the round's
+    writes, so a later commit of the same round number declares none of
+    them; the manifest stays untouched.
+    """
+
+    def __init__(self, io: TableIO, spark: SparkSession, round_no: int):
+        self.io, self.spark, self.round_no = io, spark, round_no
+        self._pool = ThreadPoolExecutor(max_workers=8)
+        self._writes: list = []
+        self._cached: list[DataFrame] = []
+        #: the seen-store append the admission stage hands back
+        #: (:func:`seen.filter_and_update_abucket_flagged`)
+        self.seen_append = None
+
+    def __enter__(self) -> "_Round":
+        return self
+
+    def __exit__(self, exc_type, *_) -> None:
+        committed = False
+        try:
+            if exc_type is None:
+                self._commit()
+                committed = True
+        finally:
+            if not committed:
+                self._pool.shutdown(wait=True, cancel_futures=True)
+                self._release()
+                self.io.forget_round(self.round_no)
+
+    def submit(self, fn, *args):
+        return self._pool.submit(fn, *args)
+
+    def write(self, df: DataFrame, name: str) -> None:
+        self._writes.append(self.submit(self.io.write_table, df, name, self.round_no))
+
+    def write_delta(
+        self, df: DataFrame, name: str, part_col: str, touched: list[int],
+        base_round: int,
+    ) -> None:
+        self._writes.append(self.submit(
+            self.io.write_table_delta, df, name, self.round_no, part_col,
+            touched, base_round,
+        ))
+
+    def cache(self, df: DataFrame) -> DataFrame:
+        """Persist ``df`` (if it is not already) until the round ends."""
+        if not df.is_cached:
+            df.persist()
+        self._cached.append(df)
+        return df
+
+    def _release(self) -> None:
+        while self._cached:
+            self._cached.pop().unpersist()
+
+    def _commit(self) -> None:
+        for w in self._writes:
+            w.result()  # propagate any write failure BEFORE the commit
+        self._pool.shutdown(wait=True)
+        self._release()
+        if not self._writes:
+            return
+        # The seen-store append runs once every cache above is dropped: its
+        # insertInto on the seen-store catalog table makes Spark re-plan
+        # each cached plan that scans the store (the admission pass and
+        # everything derived from it), seconds per plan, and a dropped
+        # cache has nothing to re-plan.  Its source is the round's
+        # just-written `admitted` (exactly the fresh rows), not the cache.
+        if self.seen_append is not None:
+            self.seen_append(self.io.read_table(self.spark, "admitted", self.round_no))
+        self.io.commit_round(self.round_no)
 
 
 class CrawlEngine:
+    """The crawl engine over one snapshot directory (``base_dir``).
+
+    Opt-in policies — each default off, which keeps every golden
+    byte-identical to the reference-parity path:
+
+    ``adaptive_budget`` — error-rate feedback on the per-host budget
+    (crawl hygiene): a host whose PREVIOUS round's popped batch was
+    majority-missing (2*missing >= popped, missing > 0) gets its base
+    budget halved (floor, min 1) THIS round, before carry and
+    crawl-delay caps.  Deterministic integer rule, twinned in
+    pyref.PyRefCrawl(adaptive_budget=True); the rule reads the latest
+    committed ``host_log`` (popped = fetched + missing), so a resumed
+    engine continues identically.
+
+    ``host_rank`` — crawl prioritization: (host, rank) dimension with
+    rank in [0, pol.PRIO_RANK_MAX] integer millionths — e.g.
+    queries_pipeline.host_pagerank scaled by 1e6.  None (default) keeps
+    pure-BFS priority = depth: reference parity, goldens unchanged.  The
+    dimension is one row per host — broadcast into admission, never a
+    shuffle.
+
+    ``quality_rank`` — QUALITY-FEEDBACK prioritization (the tier-crawl
+    loop closed on the crawl's own content instead of its link graph):
+    discoveries in round r are priority-stamped by their host's
+    cumulative mean EXTRACTED-text length through round r-1 — score =
+    min(PRIO_RANK_MAX, sum_chars div n_docs), priority = depth *
+    PRIO_SCALE + (PRIO_RANK_MAX - score) (the same politeness.PRIO_*
+    composition as host_rank, so depth stays the major key).  Integer
+    floor math end-to-end; the cumulative (host, sum_chars, n_docs)
+    persists as the ``hostqual`` table, so a resumed engine continues
+    identically, and rows already stamped keep their priority (a host's
+    later quality never rewrites history — matches the pyref twin).
+    Mutually exclusive with the static host_rank dimension: one
+    prioritization policy per engine.
+
+    ``trap_guard`` — SPIDER-TRAP quarantine (crawl hygiene — the engine
+    half of queries_pipeline.spider_trap_hosts' corpus-level heuristic):
+    a host whose cumulative discoveries look auto-generated — n_disc >=
+    trap_fanout * n_fetched AND a discovery was seen at depth >=
+    trap_depth (calendars / faceted search / session-id url spaces fan
+    out faster and deeper than hand-authored content) — has its
+    effective budget QUARANTINED to 1 fetch per round from the next
+    round on.  Quarantine, not exclusion: the crawl still drains every
+    admitted url eventually (final seen set / fetched set are
+    unchanged), the trap host just stops monopolizing its budget share.
+    Deterministic integer rule, twinned in
+    pyref.PyRefCrawl(trap_guard=True); the cumulative per-host
+    (n_fetched, n_disc, max_depth) stats persist as the ``hosttrap``
+    table, read at its latest committed version, so a resumed engine
+    continues identically.
+
+    ``mirror_guard`` — MIRROR quarantine (crawl hygiene — the engine half
+    of queries_pipeline.source_overlap_matrix's corpus-level report):
+    every fetched page's EXTRACTED text is xxhash64'd and tested against
+    the cumulative content-hash set (prior rounds, plus earlier fetch_seq
+    within the same round); a host whose cumulative fetches are
+    majority-duplicate content (n_fetched >= mirror_min AND 2*n_dup >=
+    n_fetched) has its effective budget quarantined to 1 fetch per round
+    — mirrors / syndication farms stop monopolizing budget while the
+    crawl still drains every admitted url (final seen set unchanged).
+    The quarantine LIFTS if the ratio recovers.  Deterministic integer
+    rule, twinned in pyref.PyRefCrawl(mirror_guard=True); cumulative
+    (host, n_fetched, n_dup) persists as the ``hostdup`` table (read at
+    its latest committed version), and each round's NEW hashes persist
+    as a ``contenthash`` partition, so a resumed engine continues
+    identically.  Composition note: refresh() re-fetches serve UNCHANGED
+    content as dups by design — the dup ratio doubles as a change-rate
+    signal — while set_pages() snapshots with real changes hash fresh.
+    At the 10^10-URL design point the contenthash membership join rides
+    the same bucketed-store layout as the URL seen filter (hash-range
+    partitions, storage-partitioned anti-join); the per-round parquet
+    partitions here are the sandbox analog, exactly like the URL
+    layer's.
+
+    ``log_links`` — link-graph logging: per round, persist every
+    extracted (src_url, dst_url, kind) edge as a `links` table — the
+    input to host_link_graph() -> queries_pipeline.pagerank_integer ->
+    the host_rank prioritization dimension, closing the crawl -> link
+    graph -> rank -> prioritized-crawl loop on REAL edges.  Default off:
+    one extra per-round write, and goldens/bench measure the
+    reference-parity path.
+
+    ``use_sitemaps`` — SITEMAP DISCOVERY (sitemaps.org protocol): round 0
+    additionally admits ``{origin}/sitemap.xml`` for every distinct seed
+    origin (same depth-0 / robots / seen semantics as the seeds), and
+    every fetched page contributes its ``<loc>`` URLs to the link
+    fan-out alongside its hrefs (one extra vectorized findall; empty on
+    non-sitemap pages).  This is how pages with NO inbound <a href>
+    anywhere become crawlable — the only discovery channel real sites
+    control directly.  Two further protocol pieces ride the same flag:
+    SITEMAP INDEXES (a ``<loc>`` naming another ``.xml`` file is
+    admitted as a fetchable page — but only via the sitemap channel,
+    never via ``<a href>`` — so nested ``<sitemapindex>`` files recurse
+    for free through the normal fetch loop), and robots ``Sitemap:``
+    DIRECTIVES (an optional ``sitemaps array<string>`` column on the
+    robots dimension; each fetched page fans out its host's declared
+    sitemap URLs like links, so a non-conventional sitemap path is
+    discovered the round after its host is first fetched).  Twinned in
+    pyref.PyRefCrawl(use_sitemaps=True).
+    """
     def __init__(
         self,
         spark: SparkSession,
@@ -211,21 +410,8 @@ class CrawlEngine:
         #: otherwise grows one partition x n_buckets files per round).
         #: None = never (callers may invoke compact_seen() themselves).
         self.compact_seen_every = compact_seen_every
-        #: Opt-in error-rate feedback on the per-host budget (crawl
-        #: hygiene): a host whose PREVIOUS round's popped batch was
-        #: majority-missing (2*missing >= popped, missing > 0) gets its
-        #: base budget halved (floor, min 1) THIS round, before carry and
-        #: crawl-delay caps.  Deterministic integer rule, twinned in
-        #: pyref.PyRefCrawl(adaptive_budget=True); the rule reads the
-        #: latest committed ``host_log`` (popped = fetched + missing), so
-        #: a resumed engine continues identically.
+        # opt-in policies: see the class docstring
         self.adaptive_budget = adaptive_budget
-        #: Opt-in crawl prioritization: (host, rank) dimension with rank
-        #: in [0, pol.PRIO_RANK_MAX] integer millionths — e.g.
-        #: queries_pipeline.host_pagerank scaled by 1e6.  None (default)
-        #: keeps pure-BFS priority = depth: reference parity, goldens
-        #: unchanged.  The dimension is one row per host — broadcast into
-        #: admission, never a shuffle.
         self.host_rank = (
             host_rank.select(
                 "host", F.col("rank").cast("long").alias("rank")
@@ -233,66 +419,13 @@ class CrawlEngine:
             if host_rank is not None
             else None
         )
-        #: Opt-in QUALITY-FEEDBACK prioritization (the tier-crawl loop
-        #: closed on the crawl's own content instead of its link graph):
-        #: discoveries in round r are priority-stamped by their host's
-        #: cumulative mean EXTRACTED-text length through round r-1 —
-        #: score = min(PRIO_RANK_MAX, sum_chars div n_docs), priority =
-        #: depth * PRIO_SCALE + (PRIO_RANK_MAX - score) (the same
-        #: politeness.PRIO_* composition as host_rank, so depth stays
-        #: the major key).  Integer floor math end-to-end; the
-        #: cumulative (host, sum_chars, n_docs) persists as the
-        #: ``hostqual`` table, so a resumed engine continues
-        #: identically, and rows already stamped keep their priority (a
-        #: host's later quality never rewrites history — matches the
-        #: pyref twin).  Mutually exclusive with the static host_rank
-        #: dimension: one prioritization policy per engine.
         if quality_rank and host_rank is not None:
             raise ValueError(
                 "quality_rank and host_rank are mutually exclusive "
                 "prioritization policies"
             )
         self.quality_rank = quality_rank
-        #: Opt-in SPIDER-TRAP quarantine (crawl hygiene — the engine half
-        #: of queries_pipeline.spider_trap_hosts' corpus-level heuristic):
-        #: a host whose cumulative discoveries look auto-generated —
-        #: n_disc >= trap_fanout * n_fetched AND a discovery was seen at
-        #: depth >= trap_depth (calendars / faceted search / session-id
-        #: url spaces fan out faster and deeper than hand-authored
-        #: content) — has its effective budget QUARANTINED to 1 fetch per
-        #: round from the next round on.  Quarantine, not exclusion: the
-        #: crawl still drains every admitted url eventually (final seen
-        #: set / fetched set are unchanged), the trap host just stops
-        #: monopolizing its budget share.  Deterministic integer rule,
-        #: twinned in pyref.PyRefCrawl(trap_guard=True); the cumulative
-        #: per-host (n_fetched, n_disc, max_depth) stats persist as the
-        #: ``hosttrap`` table, read at its latest committed version, so
-        #: a resumed engine continues identically.
         self.trap_guard = trap_guard
-        #: Opt-in MIRROR quarantine (crawl hygiene — the engine half of
-        #: queries_pipeline.source_overlap_matrix's corpus-level report):
-        #: every fetched page's EXTRACTED text is xxhash64'd and tested
-        #: against the cumulative content-hash set (prior rounds, plus
-        #: earlier fetch_seq within the same round); a host whose
-        #: cumulative fetches are majority-duplicate content
-        #: (n_fetched >= mirror_min AND 2*n_dup >= n_fetched) has its
-        #: effective budget quarantined to 1 fetch per round — mirrors /
-        #: syndication farms stop monopolizing budget while the crawl
-        #: still drains every admitted url (final seen set unchanged).
-        #: The quarantine LIFTS if the ratio recovers.  Deterministic
-        #: integer rule, twinned in pyref.PyRefCrawl(mirror_guard=True);
-        #: cumulative (host, n_fetched, n_dup) persists as the ``hostdup``
-        #: table (read at its latest committed version), and each round's
-        #: NEW hashes persist as a ``contenthash`` partition, so a
-        #: resumed engine continues
-        #: identically.  Composition note: refresh() re-fetches serve
-        #: UNCHANGED content as dups by design — the dup ratio doubles as
-        #: a change-rate signal — while set_pages() snapshots with real
-        #: changes hash fresh.  At the 10^10-URL design point the
-        #: contenthash membership join rides the same bucketed-store
-        #: layout as the URL seen filter (hash-range partitions, storage-
-        #: partitioned anti-join); the per-round parquet partitions here
-        #: are the sandbox analog, exactly like the URL layer's.
         self.mirror_guard = mirror_guard
         if mirror_guard and mirror_min < 1:
             raise ValueError("mirror_min must be >= 1")
@@ -304,34 +437,7 @@ class CrawlEngine:
             raise ValueError("trap_fanout and trap_depth must be >= 1")
         self.trap_fanout = trap_fanout
         self.trap_depth = trap_depth
-        #: Opt-in link-graph logging: per round, persist every extracted
-        #: (src_url, dst_url, kind) edge as a `links` table — the input
-        #: to host_link_graph() -> queries_pipeline.pagerank_integer ->
-        #: the host_rank prioritization dimension, closing the
-        #: crawl -> link graph -> rank -> prioritized-crawl loop on REAL
-        #: edges.  Default off: one extra per-round write, and goldens/
-        #: bench measure the reference-parity path.
         self.log_links = log_links
-        #: Opt-in SITEMAP DISCOVERY (sitemaps.org protocol): round 0
-        #: additionally admits ``{origin}/sitemap.xml`` for every
-        #: distinct seed origin (same depth-0 / robots / seen semantics
-        #: as the seeds), and every fetched page contributes its
-        #: ``<loc>`` URLs to the link fan-out alongside its hrefs (one
-        #: extra vectorized findall; empty on non-sitemap pages).  This
-        #: is how pages with NO inbound <a href> anywhere become
-        #: crawlable — the only discovery channel real sites control
-        #: directly.  Two further protocol pieces ride the same flag:
-        #: SITEMAP INDEXES (a ``<loc>`` naming another ``.xml`` file is
-        #: admitted as a fetchable page — but only via the sitemap
-        #: channel, never via ``<a href>`` — so nested
-        #: ``<sitemapindex>`` files recurse for free through the normal
-        #: fetch loop), and robots ``Sitemap:`` DIRECTIVES (an optional
-        #: ``sitemaps array<string>`` column on the robots dimension;
-        #: each fetched page fans out its host's declared sitemap URLs
-        #: like links, so a non-conventional sitemap path is discovered
-        #: the round after its host is first fetched).  Twinned in
-        #: pyref.PyRefCrawl(use_sitemaps=True); default False keeps
-        #: every golden byte-identical.
         self.use_sitemaps = use_sitemaps
         #: (host, href) broadcast dimension of robots-declared sitemap
         #: URLs — present only when the opt-in is on AND the robots input
@@ -371,66 +477,21 @@ class CrawlEngine:
             for r in stats_df.collect()
         }
 
-    def _admit(self, cand: DataFrame, round_no: int):
-        """Candidates (url, depth, kind) -> flagged fresh rows.
-
-        One seen-filter pass against the bucketed seen store does
-        within-batch dedup + seen-test + per-kind stats, and decorates
-        every deduped candidate with its host and robots verdict.
-        Returns (flagged, parents, stats_fn, append_fn); ``stats_fn()``
-        yields {kind: {candidates, fresh, deduped, denied}} from ONE
-        combined aggregate.  ``flagged`` is an unpersisted view over
-        ``flagged_all``, the one persisted parent; the caller unpersists
-        ``parents`` once the round's writes have returned.
-
-        ``append_fn(urls)`` is the O(fresh) partition append into the
-        store, called on the round's written ``admitted`` table AFTER
-        the unpersist (see :func:`seen.filter_and_update_abucket_flagged`).
-        """
-        def _robots_cols(df: DataFrame) -> DataFrame:
-            return (
-                df.withColumn("host", host_expr(F.col("url")))
-                .join(
-                    F.broadcast(self.robots.select("host", "_rules")),
-                    "host",
-                    "left",
-                )
-                .withColumn(
-                    "denied",
-                    pol.robots_denied_rules_expr(F.col("url"), F.col("_rules")),
-                )
-                .drop("_rules")
+    def _robots_cols(self, df: DataFrame) -> DataFrame:
+        """Candidate rows decorated with their host and robots verdict."""
+        return (
+            df.withColumn("host", host_expr(F.col("url")))
+            .join(
+                F.broadcast(self.robots.select("host", "_rules")),
+                "host",
+                "left",
             )
-
-        # single-materialization admission (guide §5): the seen flag,
-        # the robots decoration, the stats and the fresh rows all read
-        # ONE persisted pass over the deduped candidates instead of
-        # three chained persists
-        flagged_all, _stats_df, append_fn = S.filter_and_update_abucket_flagged(
-            cand, self.spark, self._seen_table(), self.n_buckets,
-            upto_round=round_no - 1, round_no=round_no,
-            decorate=_robots_cols,
+            .withColumn(
+                "denied",
+                pol.robots_denied_rules_expr(F.col("url"), F.col("_rules")),
+            )
+            .drop("_rules")
         )
-        flagged = flagged_all.filter(F.col("_seen").isNull()).select(
-            "url", "host", "depth", "kind", "denied"
-        )
-        # ONE combined stats action (guide §5): per-kind candidate /
-        # fresh / denied counts in a single aggregate over the one
-        # persisted admission pass.  The old form ran the kind stats
-        # and the denied count as two CONCURRENT first-touch jobs
-        # over the same not-yet-materialized cache — racing partitions
-        # compute the 2M-row canon->hash->membership chain roughly
-        # twice; a single job materializes the cache exactly once.
-        stats_all = flagged_all.groupBy("kind").agg(
-            F.count("*").alias("n_cand"),
-            F.count(F.when(F.col("_seen").isNull(), True)).alias("n_fresh"),
-            F.count(
-                F.when(F.col("_seen").isNull() & F.col("denied"), True)
-            ).alias("n_denied"),
-        )
-        return flagged, [flagged_all], (
-            lambda: self._stats_dict(stats_all)
-        ), append_fn
 
     def _effective_budget(
         self,
@@ -582,38 +643,26 @@ class CrawlEngine:
             flagged.filter((F.col("kind") == "page") & ~F.col("denied"))
             .groupBy("host")
             .agg(
-                F.count("*").alias("d_n"),
-                F.max("depth").alias("d_md"),
+                F.count("*").alias("n_disc"),
+                F.max("depth").alias("max_depth"),
             )
         )
-        out = disc.select(
+        now = disc.select(
             "host",
-            F.lit(0).cast("long").alias("f_n"),
-            F.col("d_n").cast("long"),
-            F.col("d_md").cast("long"),
+            F.lit(0).cast("long").alias("n_fetched"),
+            F.col("n_disc").cast("long"),
+            F.col("max_depth").cast("long"),
         )
         if done_h is not None:
-            fet = done_h.select(
-                "host",
-                F.col("n_fetched").cast("long").alias("f_n"),
-                F.lit(0).cast("long").alias("d_n"),
-                F.lit(0).cast("long").alias("d_md"),
-            )
-            out = out.unionByName(fet)
-        if prev_trap is not None:
-            out = out.unionByName(
-                prev_trap.select(
+            now = now.unionByName(
+                done_h.select(
                     "host",
-                    F.col("n_fetched").alias("f_n"),
-                    F.col("n_disc").alias("d_n"),
-                    F.col("max_depth").alias("d_md"),
+                    F.col("n_fetched").cast("long"),
+                    F.lit(0).cast("long").alias("n_disc"),
+                    F.lit(0).cast("long").alias("max_depth"),
                 )
             )
-        return out.groupBy("host").agg(
-            F.sum("f_n").cast("long").alias("n_fetched"),
-            F.sum("d_n").cast("long").alias("n_disc"),
-            F.max("d_md").cast("long").alias("max_depth"),
-        )
+        return _cumulative(prev_trap, now, ("n_fetched", "n_disc"), ("max_depth",))
 
     def _frontier_rows(
         self, flagged: DataFrame, round_no: int, rank_dim: DataFrame | None = None
@@ -652,153 +701,38 @@ class CrawlEngine:
             F.lit(None).cast("long").alias("fetch_seq"),
         )
 
-    # ------------------------------------------------------------------
-    def init_state(self) -> dict:
-        """Round 0: admit the seed list; commit the initial snapshot.
+    # -- round stages ----------------------------------------------------
+    # run_round runs _pending -> _budget -> _pop_fetch -> _extract ->
+    # _fan_out -> _admission -> _assets -> _host_lineage -> _frontier_merge
+    # inside one _Round; init_state is round 0 of the same _admission ->
+    # _frontier_merge stages.  Stages submit their writes and collects to
+    # the round in the order listed, which is the order the pool overlaps
+    # them in.
 
-        Independent driver-blocking actions (the admission stats
-        collect, then the snapshot writes) are submitted CONCURRENTLY from
-        a thread pool: each action's Catalyst analysis and job-scheduling
-        latency — the engine's dominant fixed per-round cost — overlaps
-        instead of summing.  The seen-store append (after the caches are
-        dropped, as in run_round) and the commit point stay strictly
-        after every write has returned."""
-        marks: list = []
-        self._mark(marks, "start")
-        self.io.set_meta("seen_config", {"n_buckets": self.n_buckets})
-        S.ensure_seen_store(self.spark, self.io.base, self.n_buckets, fresh=True)
-        self._mark(marks, "seen_init")
-        seeds = self.seeds.select(
-            canonicalize_url_expr("url").alias("url"),
-            F.lit(0).cast("long").alias("depth"),
-            F.lit("page").alias("kind"),
-        )
-        if self.use_sitemaps:
-            # one /sitemap.xml candidate per DISTINCT seed origin —
-            # depth 0, same robots/seen admission as the seeds (a
-            # deny-all host keeps its sitemap out too, like a real
-            # crawler honoring REP)
-            sitemaps = (
-                seeds.select(
-                    F.regexp_extract(
-                        "url", r"^([a-z][a-z0-9+.\-]*://[^/?]*)", 1
-                    ).alias("origin")
-                )
-                .filter(F.col("origin") != "")
-                .distinct()
-                .select(
-                    canonicalize_url_expr(
-                        F.concat(F.col("origin"), F.lit("/sitemap.xml"))
-                    ).alias("url"),
-                    F.lit(0).cast("long").alias("depth"),
-                    F.lit("page").alias("kind"),
-                )
-            )
-            seeds = seeds.unionByName(sitemaps)
-        flagged, parents, stats_fn, append_seen = self._admit(seeds, 0)
-        counters = {k: 0 for k in COUNTER_KEYS}
-        # round 0 writes no per-host feedback table: run_round reads each
-        # one at its latest committed version, and an absent table means
-        # no state yet — except hosttrap, because round 0's admitted
-        # seeds ARE discoveries (depth 0, no fetch source)
-        try:
-            with ThreadPoolExecutor(max_workers=8) as pool:
-                f_stats = pool.submit(stats_fn)
-                sall = f_stats.result()
-                pstats = sall.get("page", {"deduped": 0, "fresh": 0})
-                counters["deduped"] = pstats["deduped"]
-                counters["robots_denied"] = sum(
-                    v.get("denied", 0) for v in sall.values()
-                )
-                counters["discovered"] = pstats["fresh"] - counters["robots_denied"]
-                self._mark(marks, "admit_stats")
-                writes = [
-                    pool.submit(
-                        self.io.write_table_delta,
-                        self._frontier_rows(flagged, 0), "frontier", 0,
-                        "discovered_round", [0], None,
-                    ),
-                    pool.submit(
-                        self.io.write_table, flagged.select("url", "kind"), "admitted", 0
-                    ),
-                    pool.submit(self._write_counters, counters, 0),
-                ]
-                if self.trap_guard:
-                    writes.append(
-                        pool.submit(
-                            self.io.write_table,
-                            self._trap_update(None, flagged, None),
-                            "hosttrap",
-                            0,
-                        )
-                    )
-                for w in writes:
-                    w.result()  # propagate failures BEFORE the commit point
-                self._mark(marks, "writes_joined")
-        finally:
-            for df in parents:
-                df.unpersist()
-        append_seen(self.io.read_table(self.spark, "admitted", 0))
-        self._mark(marks, "seen_persist")
-        if os.environ.get("GEOCRAWL_PROFILE"):
-            spans = [
-                f"{label}={t1 - t0:.2f}s"
-                for (label, t1), (_, t0) in zip(marks[1:], marks[:-1])
-            ]
-            print("[init_state] " + " ".join(spans), flush=True)
-        self.io.commit_round(0)
-        return counters
-
-    def _write_counters(self, counters: dict, round_no: int) -> None:
-        row = {"round": round_no, **{k: int(counters.get(k, 0)) for k in COUNTER_KEYS}}
-        schema = "round long, " + ", ".join(f"{k} long" for k in COUNTER_KEYS)
-        self.io.write_table(
-            self.spark.createDataFrame([row], schema), "crawl_log", round_no
-        )
-
-    # ------------------------------------------------------------------
-    def _mark(self, marks: list, label: str) -> None:
-        """Section timer for round profiling (GEOCRAWL_PROFILE=1): driver
-        wall-time between marks, printed at round end.  The engine's
-        per-round latency is dominated by driver-blocking actions, so
-        wall-between-marks is the right lens for job-count tuning."""
-        import time as _t
-
-        marks.append((label, _t.time()))
-
-    def run_round(self, round_no: int) -> dict:
-        marks: list = []
-        self._mark(marks, "start")
-        frontier = self.io.read_table(self.spark, "frontier", round_no - 1)
-        pending = frontier.filter(F.col("status") == "pending")
+    def _pending(self, rnd: _Round):
+        """(previous frontier, cached per-host pending counts, n_pending)."""
+        frontier = self.io.read_table(self.spark, "frontier", rnd.round_no - 1)
         # ONE pending scan serves both the round-entry count and the
         # per-host lineage: materialize the per-host pending counts first
-        # and derive n_pending as their sum (the host_log/carry section
-        # below reuses the persisted pend_h instead of re-scanning)
-        pend_h = (
-            pending.groupBy("host").agg(F.count("*").alias("n_pending")).persist()
+        # and derive n_pending as their sum (_host_lineage reuses the
+        # cached pend_h instead of re-scanning)
+        pend_h = rnd.cache(
+            frontier.filter(F.col("status") == "pending")
+            .groupBy("host")
+            .agg(F.count("*").alias("n_pending"))
         )
-        n_pending = int(
-            pend_h.agg(F.sum("n_pending")).collect()[0][0] or 0
-        )
-        self._mark(marks, "pending_count")
-        counters = {k: 0 for k in COUNTER_KEYS}
-        if n_pending == 0:
-            pend_h.unpersist()
-            return {"done": True, **counters}
+        n_pending = int(pend_h.agg(F.sum("n_pending")).collect()[0][0] or 0)
+        return frontier, pend_h, n_pending
 
-        # --- politeness pop (bounded batch) ----------------------------
-        # budget = base + residual carry from the previous round (H1);
-        # fetch_seq: distributed total order by (priority, url) — range
-        # partition + per-partition rank + offsets, NEVER a global
-        # single-partition window (tests/test_politeness.py asserts the
-        # plan has no SinglePartition exchange).
-        # Per-host state is read at its latest committed version through
-        # round-1 (a refresh or an empty-fetch round writes no new
-        # version); None means no state yet: zero carry, score 0, no
-        # quarantine.  Each feedback input is cumulative THROUGH round-1 —
-        # this round's fetches and discoveries update it for the NEXT
-        # round, the one-round lag the pyref twin mirrors.
+    def _budget(self, round_no: int):
+        """(effective per-host budget, {name: previous feedback table}).
+
+        Per-host state is read at its latest committed version through
+        round-1 (a refresh or an empty-fetch round writes no new
+        version); None means no state yet: zero carry, score 0, no
+        quarantine.  Each feedback input is cumulative THROUGH round-1 —
+        this round's fetches and discoveries update it for the NEXT
+        round, the one-round lag the pyref twin mirrors."""
         def latest(name: str, on: bool = True) -> DataFrame | None:
             return self.io.read_latest(self.spark, name, round_no - 1) if on else None
 
@@ -812,17 +746,31 @@ class CrawlEngine:
                 (F.col("fetched") + F.col("missing")).alias("popped"),
                 "missing",
             ).filter(F.col("popped") > 0)
-        prev_qual = latest("hostqual", self.quality_rank)
-        rank_dim = self._quality_rank_dim(prev_qual)
-        prev_trap = latest("hosttrap", self.trap_guard)
-        prev_dup = latest("hostdup", self.mirror_guard)
-        eff_budget = self._effective_budget(
+        prev = {
+            "hostqual": latest("hostqual", self.quality_rank),
+            "hosttrap": latest("hosttrap", self.trap_guard),
+            "hostdup": latest("hostdup", self.mirror_guard),
+        }
+        eff = self._effective_budget(
             carry,
             err,
-            self._trap_dim(prev_trap),
-            self._mirror_dim(prev_dup),
+            self._trap_dim(prev["hosttrap"]),
+            self._mirror_dim(prev["hostdup"]),
         )
-        self._mark(marks, "budget_built")
+        return eff, prev
+
+    def _pop_fetch(
+        self, rnd: _Round, frontier: DataFrame, eff: DataFrame,
+        n_pending: int, counters: dict,
+    ):
+        """Politeness pop of the bounded batch, then the fetch join:
+        (cached fetched batch, sorted frontier layers it popped from)."""
+        round_no = rnd.round_no
+        # budget = base + residual carry from the previous round (H1);
+        # fetch_seq: distributed total order by (priority, url) — range
+        # partition + per-partition rank + offsets, NEVER a global
+        # single-partition window (tests/test_politeness.py asserts the
+        # plan has no SinglePartition exchange).
         # Project the pop input to the columns the batch actually carries
         # (guide §2.3: shuffle fewer bytes): every pending row has
         # status='pending' and NULL fetch_round/fetch_seq by definition,
@@ -830,504 +778,283 @@ class CrawlEngine:
         # ride through the politeness windows' shuffles.
         batch = global_sequence(
             pol.pop_batch(
-                pending.select(
+                frontier.filter(F.col("status") == "pending").select(
                     "url", "host", "depth", "priority", "discovered_round"
                 ),
-                eff_budget,
+                eff,
                 self.salt,
             ),
             ["priority", "url"],
             self.io._table_path("batch", round_no),
         )
-        self._mark(marks, "batch_ranked")
         # global_sequence wrote its range files outside TableIO — record
         # the write so commit_round can truthfully declare the table
         self.io.mark_written("batch", round_no)
         if self.round_cap is not None:
             batch = batch.filter(F.col("fetch_seq") <= self.round_cap)
-
-        # --- fetch (join the pages table) -------------------------------
-        fetched = batch.join(
-            self.pages.select("url", "html", "warc_ts"), "url", "left"
-        ).persist()
+        fetched = rnd.cache(
+            batch.join(self.pages.select("url", "html", "warc_ts"), "url", "left")
+        )
         # ONE combined job: batch size, fetch hits, AND the set of frontier
         # layers the batch popped from (the MERGE rewrite's `touched` used
         # to cost a separate distinct+collect job)
         n_batch, n_fetched, layer_set = fetched.agg(
             F.count("*"), F.count("html"), F.collect_set("discovered_round")
         ).collect()[0]
-        touched = sorted(int(x) for x in layer_set)
         counters["deferred_politeness"] = n_pending - n_batch
         counters["fetched"] = n_fetched
         counters["missing"] = n_batch - n_fetched
-        self._mark(marks, "pop_fetch")
-        got = fetched.filter(F.col("html").isNotNull())
+        return fetched, sorted(int(x) for x in layer_set)
 
-        # Independent snapshot writes and stats collects below are
-        # submitted to a driver thread pool: each Spark action pays
-        # Catalyst analysis + job scheduling on its calling thread, and
-        # that fixed latency — not dataflow — dominates the round at
-        # moderate batch sizes, so overlapping the ~10 independent actions
-        # is the single biggest round-latency lever.  `writes` must all
-        # complete (propagating failures) BEFORE the manifest commit.
-        # Pooled section runs under try/finally: if any pooled write
-        # raises, the pool is drained (cancel_futures) and every persisted
-        # DataFrame is unpersisted instead of leaking for the round;
-        # commit_round stays unreachable on failure (manifest untouched).
-        pool = ThreadPoolExecutor(max_workers=8)
-        writes: list = []
-        flagged = kinded = parsed = append_seen = None
-        done_h = ext_src = ch_marked = None
-        parents: list = []
-        f_nassets = f_ndead = None
-        try:
-            if n_fetched == 0:
-                # Fast path (common at the crawl tail and after dead rounds):
-                # nothing fetched means provably zero link candidates, so the
-                # extract/admission/asset stages are identities.  Skipping them
-                # avoids ~10 driver-blocking empty jobs (mostly Catalyst
-                # analysis of the big parse expression trees) per round.  The
-                # per-round tables they would have written empty are simply
-                # absent — read_all_rounds unions only existing paths, and the
-                # pyref oracle produces the same zero counters.  Nothing
-                # fetched leaves the quality and dup histories unchanged,
-                # so their latest versions stay current (no write), as
-                # does the seen store (absent partition == no new hashes).
-                flagged = self.spark.createDataFrame(
-                    [], "url string, host string, depth long, kind string, denied boolean"
-                ).persist()
-                self._mark(marks, "fastpath_empty_fetch")
-            else:
-                # --- extract text (byte-identity invariant) + provenance -----
-                ext_cols = [
-                    F.col("url"),
-                    F.lit(round_no).alias("round"),
-                    A.extract_text_udf("html").alias("text_extracted"),
-                    F.length("html").alias("content_length"),
-                    F.col("warc_ts"),
-                ]
-                if self.quality_rank or self.mirror_guard:
-                    # the feedback aggregates (quality and/or content-dup)
-                    # and the extracted snapshot share one persisted
-                    # extraction pass (host/fetch_seq carried alongside,
-                    # dropped from the written table so its schema — and
-                    # the byte-identity goldens — are unchanged); the
-                    # pandas UDF runs once per page, not twice
-                    ext_src = got.select(
-                        F.col("host"), F.col("fetch_seq"), *ext_cols
-                    ).persist()
-                    extracted = ext_src.drop("host", "fetch_seq")
-                else:
-                    extracted = got.select(*ext_cols)
-                if self.quality_rank:
-                    qual_now = ext_src.groupBy("host").agg(
-                        F.sum(F.length("text_extracted"))
-                        .cast("long")
-                        .alias("sum_chars"),
-                        F.count("*").cast("long").alias("n_docs"),
-                    )
-                    new_qual = (
-                        _union_opt(prev_qual, qual_now)
-                        .groupBy("host")
-                        .agg(
-                            F.sum("sum_chars").cast("long").alias("sum_chars"),
-                            F.sum("n_docs").cast("long").alias("n_docs"),
-                        )
-                    )
-                    writes.append(
-                        pool.submit(
-                            self.io.write_table, new_qual, "hostqual", round_no
-                        )
-                    )
-                if self.mirror_guard:
-                    # a page is a dup iff its extracted-text xxhash64 was
-                    # seen in a PRIOR committed round (contenthash union;
-                    # read_all_rounds sees exactly rounds <= r-1 here) or
-                    # on an earlier fetch_seq THIS round (window rank) —
-                    # the total order pyref replays serially
-                    ch = ext_src.select(
-                        "host",
-                        "fetch_seq",
-                        F.xxhash64("text_extracted").alias("chash"),
-                    )
-                    prior = read_all_rounds(self.spark, self.io, "contenthash")
-                    wch = Window.partitionBy("chash").orderBy("fetch_seq")
-                    ranked = ch.withColumn("rn", F.row_number().over(wch))
-                    if prior is not None:
-                        # each round writes only first-seen hashes, so the
-                        # union is unique on chash by construction — the
-                        # left join cannot multiply rows
-                        ranked = ranked.join(
-                            prior.select(
-                                "chash", F.lit(True).alias("_prior")
-                            ),
-                            "chash",
-                            "left",
-                        )
-                    else:
-                        ranked = ranked.withColumn(
-                            "_prior", F.lit(None).cast("boolean")
-                        )
-                    ch_marked = ranked.withColumn(
-                        "is_dup",
-                        (F.col("rn") > 1) | F.col("_prior").isNotNull(),
-                    ).persist()
-                    dup_now = ch_marked.groupBy("host").agg(
-                        F.count("*").cast("long").alias("n_fetched"),
-                        F.sum(F.col("is_dup").cast("long"))
-                        .cast("long")
-                        .alias("n_dup"),
-                    )
-                    new_dup = (
-                        _union_opt(prev_dup, dup_now)
-                        .groupBy("host")
-                        .agg(
-                            F.sum("n_fetched").cast("long").alias("n_fetched"),
-                            F.sum("n_dup").cast("long").alias("n_dup"),
-                        )
-                    )
-                    writes.append(
-                        pool.submit(
-                            self.io.write_table, new_dup, "hostdup", round_no
-                        )
-                    )
-                    writes.append(
-                        pool.submit(
-                            self.io.write_table,
-                            ch_marked.filter(~F.col("is_dup")).select("chash"),
-                            "contenthash",
-                            round_no,
-                        )
-                    )
-                writes.append(
-                    pool.submit(self.io.write_table, extracted, "extracted", round_no)
-                )
-                self._mark(marks, "extract_submit")
-
-                # --- link fan-out: page + asset candidates in one pass -------
-                if self.log_links:
-                    # anchor-logging variant: ONE findall over raw snippets
-                    # (the href sequence is contractually identical to
-                    # extract_links_udf's — _ANCHOR_SNIPPET_RE), href and
-                    # anchor text parsed JVM-side post-explode, so link
-                    # admission is byte-identical to the plain path while
-                    # the log gains the classic ranking signal
-                    snips = got.select(
-                        "url",
-                        "depth",
-                        F.explode(A.extract_anchor_snippets_udf("html")).alias("s"),
-                    )
-                    href_c, anchor_c = A.anchor_fields(F.col("s"))
-                    links = (
-                        snips.select(
-                            "url",
-                            "depth",
-                            href_c.alias("href"),
-                            anchor_c.alias("anchor"),
-                        )
-                        .withColumn(
-                            "abs_url", A.resolve_href_expr(F.col("url"), F.col("href"))
-                        )
-                        .withColumn("canon", canonicalize_url_expr(F.col("abs_url")))
-                    )
-                else:
-                    links = (
-                        got.select("url", "depth", F.explode(A.extract_links_udf("html")).alias("href"))
-                        .withColumn("abs_url", A.resolve_href_expr(F.col("url"), F.col("href")))
-                        .withColumn("canon", canonicalize_url_expr(F.col("abs_url")))
-                    )
-                kinded = links.withColumn(
-                    "kind",
-                    F.when(A.is_page_expr(F.col("canon")), F.lit("page")).when(
-                        A.is_asset_expr(F.col("canon")), F.lit("asset")
-                    ),
-                ).filter(F.col("kind").isNotNull())
-                if self.use_sitemaps:
-                    # sitemap-CHANNEL candidates: <loc> URLs from every
-                    # fetched page (one extra vectorized findall, empty
-                    # on non-sitemap pages — no URL-conditional branch)
-                    # plus, when the robots dimension declares Sitemap:
-                    # directives, each page's host-declared sitemap URLs
-                    # (tiny broadcast join).  The channel carries its own
-                    # kind rule: a .xml target is a fetchable page HERE
-                    # (sitemap-index recursion) while staying
-                    # non-crawlable via <a href> above.
-                    loc = got.select(
-                        "url",
-                        "depth",
-                        F.explode(A.extract_sitemap_locs_udf("html")).alias(
-                            "href"
-                        ),
-                    )
-                    if self.robots_sitemaps is not None:
-                        rsm = (
-                            got.select(
-                                "url", "depth", host_expr(F.col("url")).alias("host")
-                            )
-                            .join(F.broadcast(self.robots_sitemaps), "host")
-                            .select("url", "depth", "href")
-                        )
-                        loc = loc.unionByName(rsm)
-                    if self.log_links:
-                        loc = loc.withColumn("anchor", F.lit(""))
-                    loc = (
-                        loc.withColumn(
-                            "abs_url",
-                            A.resolve_href_expr(F.col("url"), F.col("href")),
-                        )
-                        .withColumn(
-                            "canon", canonicalize_url_expr(F.col("abs_url"))
-                        )
-                        .withColumn(
-                            "kind",
-                            F.when(
-                                A.is_page_expr(F.col("canon"))
-                                | A.is_sitemap_expr(F.col("canon")),
-                                F.lit("page"),
-                            ).when(
-                                A.is_asset_expr(F.col("canon")), F.lit("asset")
-                            ),
-                        )
-                        .filter(F.col("kind").isNotNull())
-                    )
-                    kinded = kinded.unionByName(
-                        loc.select(*kinded.columns)
-                    )
-                    # freshness metadata: (canon loc, max advertised
-                    # lastmod) from this round's <url> entries — the
-                    # sitemapmeta table stale_by_sitemap() reads.  W3C
-                    # datetime parse (full ISO second resolution, then
-                    # date-only), unparseable lastmods dropped; one more
-                    # vectorized findall pass + a tiny groupBy (sitemap
-                    # pages are a sliver of any fetch batch)
-                    sme = got.select(
-                        "url",
-                        F.explode(
-                            A.extract_sitemap_entry_snippets_udf("html")
-                        ).alias("s"),
-                    ).select(
-                        "url",
-                        F.regexp_extract("s", r"<loc>([^<]+)</loc>", 1).alias(
-                            "loc"
-                        ),
-                        F.regexp_extract(
-                            "s", r"<lastmod>([^<]+)</lastmod>", 1
-                        ).alias("lm"),
-                    ).filter((F.col("loc") != "") & (F.col("lm") != ""))
-                    sm_meta = (
-                        sme.select(
-                            canonicalize_url_expr(
-                                A.resolve_href_expr(F.col("url"), F.col("loc"))
-                            ).alias("url"),
-                            F.coalesce(
-                                F.try_to_timestamp(
-                                    F.col("lm"),
-                                    F.lit("yyyy-MM-dd'T'HH:mm:ss"),
-                                ),
-                                F.try_to_timestamp(
-                                    F.col("lm"), F.lit("yyyy-MM-dd")
-                                ),
-                            ).alias("lastmod"),
-                        )
-                        .filter(F.col("lastmod").isNotNull())
-                        .groupBy("url")
-                        .agg(F.max("lastmod").alias("lastmod"))
-                    )
-                    writes.append(
-                        pool.submit(
-                            self.io.write_table,
-                            sm_meta,
-                            "sitemapmeta",
-                            round_no,
-                        )
-                    )
-                if self.log_links:
-                    # the links write and the admission pass both consume the
-                    # exploded/extracted edge set — persist it so the pandas
-                    # link-extraction UDF runs once per page, not twice
-                    kinded = kinded.persist()
-                    writes.append(
-                        pool.submit(
-                            self.io.write_table,
-                            kinded.select(
-                                F.col("url").alias("src_url"),
-                                F.col("canon").alias("dst_url"),
-                                "kind",
-                                "anchor",
-                            ),
-                            "links",
-                            round_no,
-                        )
-                    )
-                cand = kinded.select(
-                    F.col("canon").alias("url"),
-                    (F.col("depth") + 1).alias("depth"),
-                    "kind",
-                )
-
-                # --- single admission pass (seen filter + robots) ------------
-                flagged, parents, stats_fn, append_seen = self._admit(
-                    cand, round_no
-                )
-                f_stats = pool.submit(stats_fn)
-                stats = f_stats.result()
-                self._mark(marks, "admit_stats")
-                _zero = {"candidates": 0, "fresh": 0, "deduped": 0, "denied": 0}
-                p = stats.get("page", _zero)
-                a = stats.get("asset", _zero)
-                counters["deduped"] = p["deduped"] + a["deduped"]
-                counters["robots_denied"] = sum(
-                    v.get("denied", 0) for v in stats.values()
-                )
-                counters["discovered"] = p["fresh"] - p.get("denied", 0)
-
-                # --- asset extraction + parse stage --------------------------
-                if a["fresh"] - a.get("denied", 0) > 0:
-                    allowed_assets = flagged.filter(
-                        (F.col("kind") == "asset") & ~F.col("denied")
-                    ).select(F.col("url").alias("asset_url"))
-                    meta, dead, parsed = self._extract_assets(allowed_assets, round_no)
-                    writes.append(
-                        pool.submit(self.io.write_table, meta, "metadata", round_no)
-                    )
-                    writes.append(
-                        pool.submit(self.io.write_table, dead, "dead_letters", round_no)
-                    )
-                    # resolved just before the counters write — the two count
-                    # jobs overlap the host-lineage and frontier submissions
-                    f_nassets = pool.submit(meta.select("asset_url").distinct().count)
-                    f_ndead = pool.submit(dead.count)
-                else:
-                    parsed = None  # no admitted assets -> parse stage is empty
-                    f_nassets = f_ndead = None
-                self._mark(marks, "assets_submitted")
-
-                writes.append(
-                    pool.submit(
-                        self.io.write_table,
-                        flagged.select("url", "kind"), "admitted", round_no,
-                    )
-                )
-                self._mark(marks, "tail_submitted")
-
-            # --- per-host lineage (north_rule: per-partition lineage+metrics;
-            # the salted host partition is the politeness/parallelism unit) ---
-            # pend_h was materialized at round entry (it priced n_pending);
-            # done_h is tiny but derived from the full fetched batch —
-            # persist so host_log and the carry update share one computation
-            done_h = fetched.groupBy("host").agg(
-                F.count("*").alias("n_batch"), F.count("html").alias("n_fetched")
-            ).persist()
-            host_log = pend_h.join(done_h, "host", "left").select(
-                F.lit(round_no).cast("long").alias("round"),
+    def _extract(self, rnd: _Round, got: DataFrame, prev: dict) -> None:
+        """Extracted text (byte-identity invariant) + provenance, and the
+        quality / content-dup feedback tables that read it."""
+        round_no = rnd.round_no
+        ext_cols = [
+            F.col("url"),
+            F.lit(round_no).alias("round"),
+            A.extract_text_udf("html").alias("text_extracted"),
+            F.length("html").alias("content_length"),
+            F.col("warc_ts"),
+        ]
+        if self.quality_rank or self.mirror_guard:
+            # the feedback aggregates (quality and/or content-dup)
+            # and the extracted snapshot share one persisted
+            # extraction pass (host/fetch_seq carried alongside,
+            # dropped from the written table so its schema — and
+            # the byte-identity goldens — are unchanged); the
+            # pandas UDF runs once per page, not twice
+            ext_src = rnd.cache(
+                got.select(F.col("host"), F.col("fetch_seq"), *ext_cols)
+            )
+            extracted = ext_src.drop("host", "fetch_seq")
+        else:
+            extracted = got.select(*ext_cols)
+        if self.quality_rank:
+            qual_now = ext_src.groupBy("host").agg(
+                F.sum(F.length("text_extracted")).cast("long").alias("sum_chars"),
+                F.count("*").cast("long").alias("n_docs"),
+            )
+            rnd.write(
+                _cumulative(prev["hostqual"], qual_now, ("sum_chars", "n_docs")),
+                "hostqual",
+            )
+        if self.mirror_guard:
+            # a page is a dup iff its extracted-text xxhash64 was
+            # seen in a PRIOR committed round (contenthash union;
+            # read_all_rounds sees exactly rounds <= r-1 here) or
+            # on an earlier fetch_seq THIS round (window rank) —
+            # the total order pyref replays serially
+            ch = ext_src.select(
                 "host",
-                F.coalesce("n_fetched", F.lit(0)).cast("long").alias("fetched"),
-                (F.coalesce("n_batch", F.lit(0)) - F.coalesce("n_fetched", F.lit(0)))
-                .cast("long")
-                .alias("missing"),
-                (F.col("n_pending") - F.coalesce("n_batch", F.lit(0)))
-                .cast("long")
-                .alias("deferred_politeness"),
-            )
-            writes.append(pool.submit(self.io.write_table, host_log, "host_log", round_no))
-            if self.trap_guard:
-                # cumulative trap stats for the next round's quarantine
-                # decision (on the empty-fetch fast path flagged is empty
-                # and done_h adds zero fetches)
-                writes.append(
-                    pool.submit(
-                        self.io.write_table,
-                        self._trap_update(prev_trap, flagged, done_h),
-                        "hosttrap",
-                        round_no,
-                    )
-                )
-            writes.append(
-                pool.submit(
-                    self.io.write_table,
-                    self._new_carry(pend_h, done_h, eff_budget), "hostcarry", round_no,
-                )
-            )
-            self._mark(marks, "host_lineage_submitted")
-
-            # --- frontier update: MERGE-style partial rewrite ----------------
-            # The frontier is partitioned by discovered_round (BFS layer).  A
-            # round touches only the layers its batch popped from (priority =
-            # depth, so typically the current layer) plus the brand-new layer
-            # of this round's admissions — every other layer's files are
-            # carried forward by manifest reference, never rewritten.  This is
-            # the Iceberg row-level MERGE shape: per-round write cost is
-            # O(batch + admissions), not O(frontier).
-            batch_done = fetched.select(
-                "url", "host", "depth", "priority", "discovered_round",
-                F.when(F.col("html").isNotNull(), F.lit("fetched"))
-                .otherwise(F.lit("missing"))
-                .alias("status"),
-                F.lit(round_no).cast("long").alias("fetch_round"),
                 "fetch_seq",
+                F.xxhash64("text_extracted").alias("chash"),
             )
-            # `touched` came from the combined fetch agg above — no extra job.
-            # The anti-join's right side is the popped batch — bounded by
-            # round_cap / per-host budgets and already counted (n_batch) —
-            # so broadcast it (guide §3.1): the touched frontier layers
-            # stream from parquet straight into the partitioned write with
-            # NO shuffle, instead of a sort-merge join shuffling O(layer)
-            # rows.  The 64 MB conservative cap (~1M urls) falls back to
-            # the planner's choice for pathologically large batches.
-            batch_urls = batch_done.select("url")
-            if n_batch * 64 < 64 * 1024 * 1024:
-                batch_urls = F.broadcast(batch_urls)
-            rewritten = (
-                frontier.filter(F.col("discovered_round").isin(touched))
-                .join(batch_urls, "url", "left_anti")
-                .unionByName(batch_done)
-                .unionByName(self._frontier_rows(flagged, round_no, rank_dim))
-            )
-            writes.append(
-                pool.submit(
-                    self.io.write_table_delta,
-                    rewritten, "frontier", round_no,
-                    "discovered_round", touched + [round_no], round_no - 1,
+            prior = read_all_rounds(self.spark, self.io, "contenthash")
+            wch = Window.partitionBy("chash").orderBy("fetch_seq")
+            ranked = ch.withColumn("rn", F.row_number().over(wch))
+            if prior is not None:
+                # each round writes only first-seen hashes, so the
+                # union is unique on chash by construction — the
+                # left join cannot multiply rows
+                ranked = ranked.join(
+                    prior.select("chash", F.lit(True).alias("_prior")),
+                    "chash",
+                    "left",
+                )
+            else:
+                ranked = ranked.withColumn("_prior", F.lit(None).cast("boolean"))
+            ch_marked = rnd.cache(
+                ranked.withColumn(
+                    "is_dup", (F.col("rn") > 1) | F.col("_prior").isNotNull()
                 )
             )
-            if f_nassets is not None:
-                counters["assets_extracted"] = f_nassets.result()
-                counters["dead_letters"] = f_ndead.result()
-            writes.append(pool.submit(self._write_counters, counters, round_no))
-            for w in writes:
-                w.result()  # propagate any write failure BEFORE the commit
-            self._mark(marks, "writes_joined")
-        finally:
-            pool.shutdown(wait=True, cancel_futures=True)
-            for df in (fetched, flagged, parsed, pend_h, done_h, ext_src,
-                       ch_marked, kinded, *parents):
-                if df is not None:
-                    df.unpersist()
-        # The seen-store append runs once every cache above is dropped: its
-        # insertInto on the seen-store catalog table makes Spark re-plan
-        # each cached plan that scans the store (the admission pass and
-        # everything derived from it), seconds per plan, and a dropped
-        # cache has nothing to re-plan.  Its source is the round's
-        # just-written `admitted` (exactly the fresh rows), not the cache.
-        if append_seen is not None:
-            append_seen(self.io.read_table(self.spark, "admitted", round_no))
-        self._mark(marks, "seen_persist")
-        self.io.commit_round(round_no)
-        self._mark(marks, "commit")
-        if os.environ.get("GEOCRAWL_PROFILE"):
-            spans = [
-                f"{label}={t1 - t0:.2f}s"
-                for (label, t1), (_, t0) in zip(marks[1:], marks[:-1])
-            ]
-            print(f"[round {round_no}] " + " ".join(spans), flush=True)
-        return {"done": False, **counters}
+            dup_now = ch_marked.groupBy("host").agg(
+                F.count("*").cast("long").alias("n_fetched"),
+                F.sum(F.col("is_dup").cast("long")).cast("long").alias("n_dup"),
+            )
+            rnd.write(
+                _cumulative(prev["hostdup"], dup_now, ("n_fetched", "n_dup")),
+                "hostdup",
+            )
+            rnd.write(
+                ch_marked.filter(~F.col("is_dup")).select("chash"), "contenthash"
+            )
+        rnd.write(extracted, "extracted")
 
-    # ------------------------------------------------------------------
-    def _extract_assets(self, allowed_assets: DataFrame, round_no: int):
-        """Stage-2 parse/enrich (geoparse/geoparser.go:160-218)."""
-        parsed = allowed_assets.withColumn(
-            "parse", P.parse_name_expr(F.col("asset_url"))
-        ).persist()
+    def _fan_out(self, rnd: _Round, got: DataFrame) -> DataFrame:
+        """Link fan-out: the fetched pages' page + asset candidates
+        (url, depth, kind) in one pass.  Every discovery channel yields
+        (url, depth, href[, anchor]) rows; their union runs ONE resolve ->
+        canonicalize -> classify chain."""
+        if self.log_links:
+            # anchor-logging variant: ONE findall over raw snippets
+            # (the href sequence is contractually identical to
+            # extract_links_udf's — _ANCHOR_SNIPPET_RE), href and
+            # anchor text parsed JVM-side post-explode, so link
+            # admission is byte-identical to the plain path while
+            # the log gains the classic ranking signal
+            snips = got.select(
+                "url",
+                "depth",
+                F.explode(A.extract_anchor_snippets_udf("html")).alias("s"),
+            )
+            href_c, anchor_c = A.anchor_fields(F.col("s"))
+            hrefs = snips.select(
+                "url", "depth", href_c.alias("href"), anchor_c.alias("anchor")
+            )
+        else:
+            hrefs = got.select(
+                "url", "depth", F.explode(A.extract_links_udf("html")).alias("href")
+            )
+        is_page = A.is_page_expr(F.col("canon"))
+        if self.use_sitemaps:
+            # sitemap-CHANNEL candidates: <loc> URLs from every
+            # fetched page (one extra vectorized findall, empty
+            # on non-sitemap pages — no URL-conditional branch)
+            # plus, when the robots dimension declares Sitemap:
+            # directives, each page's host-declared sitemap URLs
+            # (tiny broadcast join).  The channel carries its own
+            # kind rule: a .xml target is a fetchable page HERE
+            # (sitemap-index recursion) while staying
+            # non-crawlable via <a href>.
+            locs = got.select(
+                "url", "depth", F.explode(A.extract_sitemap_locs_udf("html")).alias("href")
+            )
+            if self.robots_sitemaps is not None:
+                rsm = (
+                    got.select("url", "depth", host_expr(F.col("url")).alias("host"))
+                    .join(F.broadcast(self.robots_sitemaps), "host")
+                    .select("url", "depth", "href")
+                )
+                locs = locs.unionByName(rsm)
+            if self.log_links:
+                locs = locs.withColumn("anchor", F.lit(""))
+            hrefs = hrefs.withColumn("_sitemap", F.lit(False)).unionByName(
+                locs.withColumn("_sitemap", F.lit(True))
+            )
+            is_page = is_page | (F.col("_sitemap") & A.is_sitemap_expr(F.col("canon")))
+            rnd.write(self._sitemap_meta(got), "sitemapmeta")
+        kinded = (
+            hrefs.withColumn("abs_url", A.resolve_href_expr(F.col("url"), F.col("href")))
+            .withColumn("canon", canonicalize_url_expr(F.col("abs_url")))
+            .withColumn(
+                "kind",
+                F.when(is_page, F.lit("page")).when(
+                    A.is_asset_expr(F.col("canon")), F.lit("asset")
+                ),
+            )
+            .filter(F.col("kind").isNotNull())
+        )
+        if self.log_links:
+            # the links write and the admission pass both consume the
+            # exploded/extracted edge set — persist it so the pandas
+            # link-extraction UDF runs once per page, not twice
+            kinded = rnd.cache(kinded)
+            rnd.write(
+                kinded.select(
+                    F.col("url").alias("src_url"),
+                    F.col("canon").alias("dst_url"),
+                    "kind",
+                    "anchor",
+                ),
+                "links",
+            )
+        return kinded.select(
+            F.col("canon").alias("url"), (F.col("depth") + 1).alias("depth"), "kind"
+        )
+
+    @staticmethod
+    def _sitemap_meta(got: DataFrame) -> DataFrame:
+        """Freshness metadata: (canon loc, max advertised lastmod) from
+        this round's <url> entries — the sitemapmeta table
+        stale_by_sitemap() reads.  W3C datetime parse (full ISO second
+        resolution, then date-only), unparseable lastmods dropped; one
+        more vectorized findall pass + a tiny groupBy (sitemap pages are
+        a sliver of any fetch batch)."""
+        sme = got.select(
+            "url",
+            F.explode(A.extract_sitemap_entry_snippets_udf("html")).alias("s"),
+        ).select(
+            "url",
+            F.regexp_extract("s", r"<loc>([^<]+)</loc>", 1).alias("loc"),
+            F.regexp_extract("s", r"<lastmod>([^<]+)</lastmod>", 1).alias("lm"),
+        ).filter((F.col("loc") != "") & (F.col("lm") != ""))
+        return (
+            sme.select(
+                canonicalize_url_expr(
+                    A.resolve_href_expr(F.col("url"), F.col("loc"))
+                ).alias("url"),
+                F.coalesce(
+                    F.try_to_timestamp(F.col("lm"), F.lit("yyyy-MM-dd'T'HH:mm:ss")),
+                    F.try_to_timestamp(F.col("lm"), F.lit("yyyy-MM-dd")),
+                ).alias("lastmod"),
+            )
+            .filter(F.col("lastmod").isNotNull())
+            .groupBy("url")
+            .agg(F.max("lastmod").alias("lastmod"))
+        )
+
+    def _admission(self, rnd: _Round, cand: DataFrame, counters: dict):
+        """Candidates (url, depth, kind) -> (fresh rows, fresh allowed
+        asset count).
+
+        One seen-filter pass against the bucketed seen store does
+        within-batch dedup + seen-test + per-kind stats, and decorates
+        every deduped candidate with its host and robots verdict.  The
+        pass's one persisted parent is cached on the round, and its
+        O(fresh) seen-store append is handed to the round, which runs it
+        on the written ``admitted`` table after the caches are dropped
+        (see :func:`seen.filter_and_update_abucket_flagged`)."""
+        round_no = rnd.round_no
+        # single-materialization admission (guide §5): the seen flag,
+        # the robots decoration, the stats and the fresh rows all read
+        # ONE persisted pass over the deduped candidates instead of
+        # three chained persists
+        flagged_all, _, rnd.seen_append = S.filter_and_update_abucket_flagged(
+            cand, self.spark, self._seen_table(), self.n_buckets,
+            upto_round=round_no - 1, round_no=round_no,
+            decorate=self._robots_cols,
+        )
+        rnd.cache(flagged_all)
+        # ONE combined stats action (guide §5): per-kind candidate /
+        # fresh / denied counts in a single aggregate over the one
+        # persisted admission pass.  The old form ran the kind stats
+        # and the denied count as two CONCURRENT first-touch jobs
+        # over the same not-yet-materialized cache — racing partitions
+        # compute the 2M-row canon->hash->membership chain roughly
+        # twice; a single job materializes the cache exactly once.
+        stats_all = flagged_all.groupBy("kind").agg(
+            F.count("*").alias("n_cand"),
+            F.count(F.when(F.col("_seen").isNull(), True)).alias("n_fresh"),
+            F.count(
+                F.when(F.col("_seen").isNull() & F.col("denied"), True)
+            ).alias("n_denied"),
+        )
+        stats = rnd.submit(self._stats_dict, stats_all).result()
+        zero = {"candidates": 0, "fresh": 0, "deduped": 0, "denied": 0}
+        p, a = stats.get("page", zero), stats.get("asset", zero)
+        counters["deduped"] = p["deduped"] + a["deduped"]
+        counters["robots_denied"] = p["denied"] + a["denied"]
+        counters["discovered"] = p["fresh"] - p["denied"]
+        flagged = flagged_all.filter(F.col("_seen").isNull()).select(
+            "url", "host", "depth", "kind", "denied"
+        )
+        return flagged, a["fresh"] - a["denied"]
+
+    def _assets(self, rnd: _Round, flagged: DataFrame, n_assets: int):
+        """Stage-2 parse/enrich of the round's fresh allowed assets
+        (geoparse/geoparser.go:160-218): the metadata and dead_letters
+        writes, and the futures of their two counts (None when no asset
+        was admitted — the parse stage is then empty)."""
+        if n_assets <= 0:
+            return None
+        round_no = rnd.round_no
+        parsed = rnd.cache(
+            flagged.filter((F.col("kind") == "asset") & ~F.col("denied"))
+            .select(F.col("url").alias("asset_url"))
+            .withColumn("parse", P.parse_name_expr(F.col("asset_url")))
+        )
         dead = parsed.filter(F.col("parse.pattern").isNull()).select(
             F.col("asset_url"), F.lit(round_no).alias("round")
         )
@@ -1356,7 +1083,201 @@ class CrawlEngine:
             .otherwise(F.array(F.col("parse.ts")))
             .alias("timestamps"),
         )
-        return meta, dead, parsed
+        rnd.write(meta, "metadata")
+        rnd.write(dead, "dead_letters")
+        # resolved just before the counters write — the two count
+        # jobs overlap the host-lineage and frontier submissions
+        return rnd.submit(meta.select("asset_url").distinct().count), rnd.submit(
+            dead.count
+        )
+
+    def _host_lineage(
+        self, rnd: _Round, prev: dict, flagged: DataFrame,
+        fetched: DataFrame | None = None, pend_h: DataFrame | None = None,
+        eff: DataFrame | None = None,
+    ) -> None:
+        """Per-host lineage (north_rule: per-partition lineage+metrics;
+        the salted host partition is the politeness/parallelism unit):
+        the round's host_log and carry update, and the cumulative trap
+        stats.  Round 0 has no batch, so only the trap stats."""
+        round_no = rnd.round_no
+        done_h = None
+        if fetched is not None:
+            # pend_h was materialized at round entry (it priced n_pending);
+            # done_h is tiny but derived from the full fetched batch —
+            # persist so host_log and the carry update share one computation
+            done_h = rnd.cache(
+                fetched.groupBy("host").agg(
+                    F.count("*").alias("n_batch"), F.count("html").alias("n_fetched")
+                )
+            )
+            host_log = pend_h.join(done_h, "host", "left").select(
+                F.lit(round_no).cast("long").alias("round"),
+                "host",
+                F.coalesce("n_fetched", F.lit(0)).cast("long").alias("fetched"),
+                (F.coalesce("n_batch", F.lit(0)) - F.coalesce("n_fetched", F.lit(0)))
+                .cast("long")
+                .alias("missing"),
+                (F.col("n_pending") - F.coalesce("n_batch", F.lit(0)))
+                .cast("long")
+                .alias("deferred_politeness"),
+            )
+            rnd.write(host_log, "host_log")
+        if self.trap_guard:
+            # cumulative trap stats for the next round's quarantine
+            # decision (on the empty-fetch fast path flagged is empty
+            # and done_h adds zero fetches)
+            rnd.write(
+                self._trap_update(prev.get("hosttrap"), flagged, done_h), "hosttrap"
+            )
+        if done_h is not None:
+            rnd.write(self._new_carry(pend_h, done_h, eff), "hostcarry")
+
+    def _frontier_merge(
+        self, rnd: _Round, flagged: DataFrame, prev: dict, counters: dict,
+        assets=None, frontier: DataFrame | None = None,
+        fetched: DataFrame | None = None, touched: list[int] = [],
+    ) -> None:
+        """Frontier update as a MERGE-style partial rewrite, then the
+        round's counters row.
+
+        The frontier is partitioned by discovered_round (BFS layer).  A
+        round touches only the layers its batch popped from (priority =
+        depth, so typically the current layer) plus the brand-new layer
+        of this round's admissions — every other layer's files are
+        carried forward by manifest reference, never rewritten.  This is
+        the Iceberg row-level MERGE shape: per-round write cost is
+        O(batch + admissions), not O(frontier).  Round 0 has no batch:
+        the seeds' layer is the whole frontier."""
+        round_no = rnd.round_no
+        rows = self._frontier_rows(
+            flagged, round_no, self._quality_rank_dim(prev.get("hostqual"))
+        )
+        if fetched is not None:
+            batch_done = fetched.select(
+                "url", "host", "depth", "priority", "discovered_round",
+                F.when(F.col("html").isNotNull(), F.lit("fetched"))
+                .otherwise(F.lit("missing"))
+                .alias("status"),
+                F.lit(round_no).cast("long").alias("fetch_round"),
+                "fetch_seq",
+            )
+            # `touched` came from the combined fetch agg — no extra job.
+            # The anti-join's right side is the popped batch — bounded by
+            # round_cap / per-host budgets and already counted (n_batch) —
+            # so broadcast it (guide §3.1): the touched frontier layers
+            # stream from parquet straight into the partitioned write with
+            # NO shuffle, instead of a sort-merge join shuffling O(layer)
+            # rows.  The 64 MB conservative cap (~1M urls) falls back to
+            # the planner's choice for pathologically large batches.
+            batch_urls = batch_done.select("url")
+            n_batch = counters["fetched"] + counters["missing"]
+            if n_batch * 64 < 64 * 1024 * 1024:
+                batch_urls = F.broadcast(batch_urls)
+            rows = (
+                frontier.filter(F.col("discovered_round").isin(touched))
+                .join(batch_urls, "url", "left_anti")
+                .unionByName(batch_done)
+                .unionByName(rows)
+            )
+        rnd.write_delta(
+            rows, "frontier", "discovered_round", [*touched, round_no], round_no - 1
+        )
+        if assets is not None:
+            counters["assets_extracted"], counters["dead_letters"] = (
+                f.result() for f in assets
+            )
+        row = {"round": round_no, **{k: int(counters[k]) for k in COUNTER_KEYS}}
+        schema = "round long, " + ", ".join(f"{k} long" for k in COUNTER_KEYS)
+        rnd.write(self.spark.createDataFrame([row], schema), "crawl_log")
+
+    # ------------------------------------------------------------------
+    def init_state(self) -> dict:
+        """Round 0: admit the seed list and commit the initial snapshot —
+        the _admission -> _frontier_merge stages of a round with no
+        pending rows and no batch."""
+        self.io.set_meta("seen_config", {"n_buckets": self.n_buckets})
+        S.ensure_seen_store(self.spark, self.io.base, self.n_buckets, fresh=True)
+        seeds = self.seeds.select(
+            canonicalize_url_expr("url").alias("url"),
+            F.lit(0).cast("long").alias("depth"),
+            F.lit("page").alias("kind"),
+        )
+        if self.use_sitemaps:
+            # one /sitemap.xml candidate per DISTINCT seed origin —
+            # depth 0, same robots/seen admission as the seeds (a
+            # deny-all host keeps its sitemap out too, like a real
+            # crawler honoring REP).  An origin cut from a canonical url
+            # is canonical, and so is origin + "/sitemap.xml": a second
+            # canonicalize_url_expr over it only nests the expression
+            # tree, which Catalyst's constraint propagation then spends
+            # minutes on when the seeds come from parquet.
+            sitemaps = (
+                seeds.select(
+                    F.regexp_extract(
+                        "url", r"^([a-z][a-z0-9+.\-]*://[^/?]*)", 1
+                    ).alias("origin")
+                )
+                .filter(F.col("origin") != "")
+                .distinct()
+                .select(
+                    F.concat(F.col("origin"), F.lit("/sitemap.xml")).alias("url"),
+                    F.lit(0).cast("long").alias("depth"),
+                    F.lit("page").alias("kind"),
+                )
+            )
+            seeds = seeds.unionByName(sitemaps)
+        counters = dict.fromkeys(COUNTER_KEYS, 0)
+        # round 0 writes no per-host feedback table: run_round reads each
+        # one at its latest committed version, and an absent table means
+        # no state yet — except hosttrap, because round 0's admitted
+        # seeds ARE discoveries (depth 0, no fetch source)
+        with _Round(self.io, self.spark, 0) as rnd:
+            flagged, _ = self._admission(rnd, seeds, counters)
+            # the frontier delta, round 0's largest write, is submitted
+            # first: the FIFO scheduler gives the first job the cores first
+            self._frontier_merge(rnd, flagged, {}, counters)
+            rnd.write(flagged.select("url", "kind"), "admitted")
+            self._host_lineage(rnd, {}, flagged)
+        return counters
+
+    def run_round(self, round_no: int) -> dict:
+        """One crawl round: the round stages in order, committed by one
+        round context once every stage has returned."""
+        counters = dict.fromkeys(COUNTER_KEYS, 0)
+        with _Round(self.io, self.spark, round_no) as rnd:
+            frontier, pend_h, n_pending = self._pending(rnd)
+            if n_pending == 0:
+                return {"done": True, **counters}
+            eff, prev = self._budget(round_no)
+            fetched, touched = self._pop_fetch(rnd, frontier, eff, n_pending, counters)
+            assets = None
+            if counters["fetched"] == 0:
+                # Fast path (common at the crawl tail and after dead rounds):
+                # nothing fetched means provably zero link candidates, so the
+                # extract/admission/asset stages are identities.  Skipping them
+                # avoids ~10 driver-blocking empty jobs (mostly Catalyst
+                # analysis of the big parse expression trees) per round.  The
+                # per-round tables they would have written empty are simply
+                # absent — read_all_rounds unions only declared tables, and
+                # the pyref oracle produces the same zero counters.  Nothing
+                # fetched leaves the quality and dup histories unchanged,
+                # so their latest versions stay current (no write), as
+                # does the seen store (absent partition == no new hashes).
+                flagged = rnd.cache(self.spark.createDataFrame(
+                    [], "url string, host string, depth long, kind string, denied boolean"
+                ))
+            else:
+                got = fetched.filter(F.col("html").isNotNull())
+                self._extract(rnd, got, prev)
+                flagged, n_assets = self._admission(rnd, self._fan_out(rnd, got), counters)
+                assets = self._assets(rnd, flagged, n_assets)
+                rnd.write(flagged.select("url", "kind"), "admitted")
+            self._host_lineage(rnd, prev, flagged, fetched, pend_h, eff)
+            self._frontier_merge(
+                rnd, flagged, prev, counters, assets, frontier, fetched, touched
+            )
+        return {"done": False, **counters}
 
     # ------------------------------------------------------------------
     def run(self, max_rounds: int = 100, start_round: int | None = None) -> list[dict]:
@@ -1488,7 +1409,6 @@ class CrawlEngine:
         r_prev = self.io.latest_round()
         if r_prev is None:
             raise ValueError("refresh() before init_state(): nothing crawled yet")
-        round_no = r_prev + 1
         frontier = self.io.read_table(self.spark, "frontier", r_prev)
         sel = urls.select(canonicalize_url_expr("url").alias("url")).distinct()
         refreshable = frontier.join(sel, "url", "left_semi").filter(
@@ -1520,10 +1440,8 @@ class CrawlEngine:
             .otherwise(F.col("fetch_seq"))
             .alias("fetch_seq"),
         )
-        self.io.write_table_delta(
-            rewritten, "frontier", round_no, "discovered_round", touched, r_prev
-        )
-        self.io.commit_round(round_no)
+        with _Round(self.io, self.spark, r_prev + 1) as rnd:
+            rnd.write_delta(rewritten, "frontier", "discovered_round", touched, r_prev)
         return int(n_sel)
 
     def compact_seen(self, upto_round: int) -> dict | None:
@@ -1611,10 +1529,14 @@ def anchor_terms(
 
 
 def read_all_rounds(spark: SparkSession, io: TableIO, name: str) -> DataFrame | None:
+    """``name`` unioned over every committed round whose manifest entry
+    declares it (the same rule as :meth:`TableIO.read_latest`: the
+    directory of a crashed or uncommitted round is never read), or None
+    when no round declares it."""
     m = io._read_manifest()
-    paths = []
-    for r in m["committed"]:
-        p = io._table_path(name, r)
-        if os.path.exists(p):
-            paths.append(p)
+    paths = [
+        io._table_path(name, r)
+        for r in m["committed"]
+        if name in m["tables"].get(str(r), ())
+    ]
     return spark.read.parquet(*paths) if paths else None

@@ -271,10 +271,12 @@ def bootstrap_robots(
         .filter(F.col("origin") != "")
         .distinct()
     )
+    # an origin cut from a canonical url is canonical, and so is
+    # origin + "/robots.txt": a second canonicalize_url_expr over it only
+    # nests the expression tree, which Catalyst's constraint propagation
+    # then spends minutes on when pages and seeds come from parquet
     rurls = org.select(
-        canonicalize_url_expr(
-            F.concat(F.col("origin"), F.lit("/robots.txt"))
-        ).alias("url")
+        F.concat(F.col("origin"), F.lit("/robots.txt")).alias("url")
     )
     latest = Window.partitionBy("url").orderBy(F.col("warc_ts").desc())
     pg = (

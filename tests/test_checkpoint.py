@@ -162,40 +162,62 @@ def _small_engine(spark, base_dir):
     )
 
 
+def _n_persisted(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def _fail_write(monkeypatch, io, table, during):
+    """Make ``io.write_table`` raise for ``table``, recording the
+    persisted-RDD count at the moment of the failure in ``during``."""
+    write_table = io.write_table
+
+    def failing(df, name, round_no):
+        if name == table:
+            during.append(_n_persisted(df.sparkSession))
+            raise OSError(f"injected {table} write failure")
+        return write_table(df, name, round_no)
+
+    monkeypatch.setattr(io, "write_table", failing)
+
+
 def test_init_state_failed_write_releases_cache(spark, tmp_path, monkeypatch):
     """A failing round-0 write surfaces as an error, leaves no round
     committed, and still drops the admission pass's cache."""
     eng = _small_engine(spark, tmp_path / "crawl")
-    parents = []
-    admit = eng._admit
-
-    def capture(*args, **kwargs):
-        out = admit(*args, **kwargs)
-        parents.extend(out[1])
-        return out
-
-    write_table = eng.io.write_table
-
-    def failing(df, name, round_no):
-        if name == "admitted":
-            raise OSError("injected admitted write failure")
-        return write_table(df, name, round_no)
-
-    monkeypatch.setattr(eng, "_admit", capture)
-    monkeypatch.setattr(eng.io, "write_table", failing)
+    eng.robots.count()  # the engine's own long-lived cache, not the round's
+    before, during = _n_persisted(spark), []
+    _fail_write(monkeypatch, eng.io, "admitted", during)
     with pytest.raises(OSError, match="injected"):
         eng.init_state()
-    assert parents
-    assert not any(p.is_cached for p in parents)
+    assert during and during[0] > before  # the admission pass was cached
+    assert _n_persisted(spark) == before
     assert eng.io.latest_round() is None
 
 
-def test_no_orphan_round_dirs_after_crawl(spark, tmp_path):
+def test_read_all_rounds_reads_only_declared_tables(spark, tmp_path):
+    """A crashed round's table stays unread after another commit of the
+    same round number that did not write it."""
+    from geocrawl_spark.frontier import read_all_rounds
+
+    io = TableIO(str(tmp_path))
+    io.write_table(_one(spark, 0), "admitted", 0)
+    io.commit_round(0)
+    io.write_table(_one(spark, 1), "admitted", 1)  # round 1 crashes here
+    io2 = TableIO(str(tmp_path))  # a fresh process resumes
+    io2.write_table(_one(spark, 1), "frontier", 1)
+    io2.commit_round(1)
+    assert io2._read_manifest()["tables"]["1"] == ["frontier"]
+    assert _vals(read_all_rounds(spark, io2, "admitted")) == [0]
+
+
+def test_no_orphan_round_dirs_after_crawl(spark, tmp_path, monkeypatch):
     """Every directory under rounds/rN is a table named in that round's
     manifest entry (VERDICT r2 'what's wrong' #4: global_sequence's batch
     scratch used to accumulate unregistered) — so rollback_to leaves no
     orphans and a resumed crawl's disk state is fully manifest-described.
-    A refresh commit writes and declares its frontier delta only."""
+    A refresh commit writes and declares its frontier delta only.  A
+    round that fails commits nothing, drops its caches, and none of its
+    writes is declared by the next commit of its round number."""
     eng = _small_engine(spark, tmp_path / "crawl")
     eng.run(max_rounds=12)
     urls = [u for _, _, u in eng.crawl_order()][:2]
@@ -219,3 +241,19 @@ def test_no_orphan_round_dirs_after_crawl(spark, tmp_path):
         assert on_disk == declared, (rdir, on_disk ^ declared)
         seen += 1
     assert seen >= 3  # a real multi-round crawl ran
+
+    seen = eng.seen_urls()
+    r0 = eng.io.latest_round()
+    before, during = _n_persisted(spark), []
+    _fail_write(monkeypatch, eng.io, "crawl_log", during)
+    with pytest.raises(OSError, match="injected"):
+        eng.run_round(r0 + 1)  # pops the two refreshed urls
+    monkeypatch.undo()
+    assert during and during[0] > before
+    assert _n_persisted(spark) == before
+    assert eng.io.latest_round() == r0
+    urls = [u for _, _, u in eng.crawl_order()][:2]
+    assert eng.refresh(spark.createDataFrame([(u,) for u in urls], "url string")) == 2
+    assert eng.io.latest_round() == r0 + 1
+    assert eng.io._read_manifest()["tables"][str(r0 + 1)] == ["frontier"]
+    assert eng.seen_urls() == seen

@@ -224,3 +224,42 @@ def test_bootstrap_static_merge(spark, boot_fixtures):
         fx["expected_robots"].iloc[0]["disallow"]
     )
     assert len(got) == N_HOSTS + 1
+
+
+def test_origin_urls_plan_quickly_over_parquet(spark, tmp_path):
+    """bootstrap_robots and init_state(use_sitemaps=True) build
+    ``origin + "/robots.txt"`` / ``"/sitemap.xml"`` urls from canonical
+    seed origins.  With pages and seeds read from parquet, canonicalizing
+    those urls a second time kept the optimizer busy for minutes; both
+    calls must finish well inside 120 s at this tiny size."""
+    import time
+
+    from geocrawl_spark.streaming import PAGES_SCHEMA
+
+    spark.createDataFrame(synth.gen_pages(40, 4), PAGES_SCHEMA).write.parquet(
+        str(tmp_path / "pages")
+    )
+    spark.createDataFrame(synth.gen_seeds(4)).write.parquet(str(tmp_path / "seeds"))
+    pages = spark.read.parquet(str(tmp_path / "pages"))
+    seeds = spark.read.parquet(str(tmp_path / "seeds"))
+
+    t0 = time.time()
+    hosts = [r["host"] for r in bootstrap_robots(spark, pages, seeds).collect()]
+    assert time.time() - t0 < 120
+    assert len(hosts) == 4
+
+    eng = CrawlEngine(
+        spark, pages, seeds,
+        robots=spark.createDataFrame(
+            synth.gen_robots(4),
+            "host string, disallow array<string>, allow array<string>",
+        ),
+        hostbudget=spark.createDataFrame(synth.gen_hostbudget(4)),
+        base_dir=str(tmp_path / "crawl"),
+        n_buckets=2,
+        use_sitemaps=True,
+    )
+    t0 = time.time()
+    counters = eng.init_state()
+    assert time.time() - t0 < 120
+    assert counters["discovered"] + counters["robots_denied"] > 4  # seeds + sitemaps
